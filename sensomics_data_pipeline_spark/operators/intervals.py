@@ -49,11 +49,7 @@ def subtract_intervals(
     partition_cols: list[str],
     start_col: str = "start_time",
     end_col: str = "end_time",
-    broadcast_sub: bool = True,
     plan: str | None = None,
-    broadcast_row_limit: int = 2_000_000,
-    per_key_limit: int = 100,
-    stats_key: tuple | None = None,
 ) -> DataFrame:
     """J4: temporal EXCEPT — remove from each ``base`` interval every
     region covered by any ``sub`` interval (``subtract_intervals``,
@@ -64,8 +60,7 @@ def subtract_intervals(
       1. merge ``sub`` (so covered regions are disjoint),
       2. emit +1/−1 boundary events for merged sub-intervals,
       3. for each base interval, clip sub boundaries to it via a range
-         join (sub side broadcast — interval lists are small relative to
-         measurements; if they ever grow, bucketize on time),
+         join with the merged sub side broadcast,
       4. rebuild the uncovered gaps per base interval with a window scan
          over the clipped sub spans.
 
@@ -73,47 +68,19 @@ def subtract_intervals(
     [a,b] yields [a,s] and [e,b] (touching endpoints retained, zero-width
     pieces included when a==s or e==b — reference emits those via its
     ``a[0] <= b[0]`` branch at ``:127,133-135``; it also emits pieces
-    where start == end. We keep zero-width pieces for parity but expose
-    ``drop_empty`` for the sane default).
+    where start == end; we keep zero-width pieces for parity).
 
-    Plan choice (same contract as :func:`interval_semijoin`):
-
-    - ``plan=None`` (default): honor the legacy ``broadcast_sub`` flag
-      unchanged — True broadcasts the merged sub side, False shuffles.
-    - ``plan="broadcast"`` / ``plan="shuffle"``: explicit.
-    - ``plan="auto"``: decide from :func:`_interval_side_stats` over
-      the RAW sub side (an upper bound on the merged side it sizes, and
-      memo-shareable with a semijoin over the same interval table) by
-      the measured SCALE_r11 crossover rule — broadcast only while the
-      sub side is small (≤ ``broadcast_row_limit`` rows) AND sparse per
-      key (≤ ``per_key_limit``); otherwise shuffle, where the
-      ``partition_cols`` equality conjuncts make the clip join a
-      co-partitioned equi-join with the range predicate as a residual.
-      With EMPTY ``partition_cols`` the shuffle regime has no equi-key
-      (it would plan a BroadcastNestedLoop — forbidden repo-wide), so
-      auto pins broadcast regardless of stats.
-
-    ``stats_key`` (only meaningful with ``plan="auto"``): stable memo
-    key for the stats job when ``sub`` is a checkpointed side whose
-    plan hash changes per DAG construction — see
-    :func:`_interval_side_stats`.
+    There is one plan. With ``partition_cols`` the clip join is a
+    broadcast hash join on the keys with the range predicate as a
+    residual; without them it is a broadcast nested-loop join. A
+    shuffled twin would hash on the same keys and apply the same
+    residual, so per-key multiplicity costs it no less, and no
+    measurement shows it winning. ``plan`` accepts only ``None`` and
+    ``"auto"``, both meaning this plan; the keyword is kept because
+    existing callers pass ``plan="auto"``.
     """
-    if plan is not None:
-        if plan not in ("broadcast", "shuffle", "auto"):
-            raise ValueError(f"unknown subtract_intervals plan {plan!r}")
-        if plan == "auto":
-            if not partition_cols:
-                broadcast_sub = True
-            else:
-                total, max_per_key = _interval_side_stats(
-                    sub, partition_cols, key_override=stats_key
-                )
-                broadcast_sub = (
-                    total <= broadcast_row_limit
-                    and max_per_key <= per_key_limit
-                )
-        else:
-            broadcast_sub = plan == "broadcast"
+    if plan not in (None, "auto"):
+        raise ValueError(f"unknown subtract_intervals plan {plan!r}")
     # deterministic per-base-interval id: row_number over the interval
     # sort keys. monotonically_increasing_id would be re-evaluated
     # independently in the left_pieces and tail branches of the union
@@ -133,23 +100,7 @@ def subtract_intervals(
     cond = (F.col("_ss") <= b[end_col]) & (F.col("_se") >= b[start_col])
     for c in partition_cols:
         cond = (b[c] == s[c]) & cond
-    # interval lists are usually tiny relative to measurements →
-    # broadcast by default. When the merged sub side outgrows a
-    # broadcast, pass broadcast_sub=False (or plan="shuffle"/"auto"):
-    # with partition_cols the equality conjuncts make this a shuffled
-    # equi-join with the range predicate as a post-filter
-    # (co-partitioned by entity, no BNLJ); the SHUFFLE_HASH hint pins
-    # the regime SCALE_r11 measured fastest once the build side is big
-    # (and keeps AQE from re-broadcasting it, so the plan is the one
-    # the dispatcher chose). With EMPTY partition_cols the broadcast
-    # path is necessarily a broadcast nested-loop (range-only
-    # predicate, no equi-key) — bounded by the merged sub side that
-    # auto guarantees small in that regime.
-    if broadcast_sub:
-        s_side = F.broadcast(s)
-    else:
-        s_side = s.hint("shuffle_hash") if partition_cols else s
-    clipped = b.join(s_side, on=cond, how="left").select(
+    clipped = b.join(F.broadcast(s), on=cond, how="left").select(
         *[b[c] for c in partition_cols],
         b["_bid"],
         b[start_col].alias("_bs"),
@@ -303,46 +254,19 @@ _INTERVAL_STATS_MEMO_MAX = 8
 
 
 def _interval_side_stats(
-    intervals: DataFrame,
-    partition_cols: list[str],
-    key_override: tuple | None = None,
+    intervals: DataFrame, partition_cols: list[str]
 ) -> tuple[int, int]:
     """Cheap stats the auto dispatcher decides on: (total interval
     rows, max intervals per partition key). One bounded agg job over
     the interval side only — never touches the probe table; memoized
     per (session, plan, files) so a loop of auto calls prices the
-    decision once.
-
-    ``key_override``: caller-supplied stable memo-key tail for interval
-    sides whose OWN plan hash is construction-unstable — a lazily
-    ``localCheckpoint``-ed side embeds a fresh RDD id in its LogicalRDD
-    every time the caller rebuilds the DAG, so ``semanticHash`` misses
-    the memo on every rebuild and the stats agg re-runs (measured: the
-    activity pipeline re-paid 2 stats jobs per bench run). The caller
-    keys on its PURE upstream identity instead (plan hashes + input
-    files + knobs of the inputs the side derives from); a stale/
-    colliding override can only mis-pick the JOIN STRATEGY, never
-    change results — both subtract plans are row-identical by the
-    certified contract."""
+    decision once."""
+    try:
+        plan_key = intervals.semanticHash()
+    except Exception:
+        plan_key = None
     key = None
-    if key_override is not None:
-        key = (
-            intervals.sparkSession.sparkContext.applicationId,
-            tuple(partition_cols),
-            key_override,
-        )
-        hit = _INTERVAL_STATS_MEMO.get(key)
-        if hit is not None:
-            _INTERVAL_STATS_MEMO.pop(key)
-            _INTERVAL_STATS_MEMO[key] = hit
-            return hit
-    plan_key = None
-    if key is None:
-        try:
-            plan_key = intervals.semanticHash()
-        except Exception:
-            plan_key = None
-    if key is None and plan_key is not None:
+    if plan_key is not None:
         try:
             files_key = hash(tuple(sorted(intervals.inputFiles())))
         except Exception:

@@ -136,7 +136,6 @@ def categorize_activity(
     step_lookback_min: int = 10,
     reset_gap_hours: int = 12,
     threshold_round_decimals: int | None = None,
-    materialize_reused: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Entry point 4 (``activity_categorize.py main``, ``:209-343``):
     sleep intervals from the resetting counter → subtract step windows →
@@ -146,45 +145,16 @@ def categorize_activity(
 
     Returns (final_categorized, categorized_acc, thresholds).
 
-    ``materialize_reused``: the composed DAG fans three intermediates
-    out to 2+ consumers each (``sleep_minus_step`` → thresholds +
-    final-subtract base; ``categorized_acc`` → active + rest;
-    ``sleep_final`` → union + wake-rest subtrahend). Without a
-    materialization point Spark re-derives each one's full upstream
-    window chain per consumer — a ~4× stage multiplier measured at
-    sf0.001-0.1. Lazy ``localCheckpoint(eager=False)`` truncates the
-    lineage at exactly those reuse seams; pass False to keep the plan
-    fully declarative (e.g. for plan-shape tests).
+    The composed DAG fans three intermediates out to 2+ consumers each
+    (``sleep_minus_step`` → thresholds + final-subtract base;
+    ``categorized_acc`` → active + rest; ``sleep_final`` → union +
+    wake-rest subtrahend). Without a materialization point Spark
+    re-derives each one's full upstream window chain per consumer — a
+    ~4× stage multiplier measured at sf0.001-0.1.
+    ``localCheckpoint(eager=False)`` truncates the lineage at exactly
+    those reuse seams.
     """
     pc = partition_cols or []
-    _mat = (
-        (lambda df: df.localCheckpoint(eager=False))
-        if materialize_reused
-        else (lambda df: df)
-    )
-
-    # Stable stats-memo key tail for the auto-subtract dispatcher: the
-    # checkpointed sub sides (active, sleep_final) embed fresh RDD ids
-    # per DAG construction, so their own plan hashes can never memo-hit
-    # across rebuilds (measured: 2 re-paid stats jobs per bench run).
-    # Key on the PURE pipeline identity instead: input plan hashes +
-    # input files + every knob that shapes the sub sides. Collisions
-    # can only mis-pick a join strategy, never change rows.
-    def _stats_key(tag: str) -> tuple | None:
-        try:
-            return (
-                "categorize_activity",
-                tag,
-                measurements.semanticHash(),
-                acc.semanticHash(),
-                hash(tuple(sorted(measurements.inputFiles()))),
-                hash(tuple(sorted(acc.inputFiles()))),
-                step_lookback_min,
-                reset_gap_hours,
-                threshold_round_decimals,
-            )
-        except Exception:
-            return None
 
     # sleep intervals: W1 dedup → W2 delta w/ reset → W3 interval → W7 merge
     sleep = window_ops.dedup_consecutive(
@@ -226,37 +196,28 @@ def categorize_activity(
         F.col("date_time").alias("end_time"),
     )
 
-    sleep_minus_step = _mat(
-        interval_ops.subtract_intervals(
-            sleep_iv, step_iv, pc, plan="auto",
-            stats_key=_stats_key("step_iv"),
-        )
-    )
+    sleep_minus_step = interval_ops.subtract_intervals(
+        sleep_iv, step_iv, pc
+    ).localCheckpoint(eager=False)
 
     thresholds = activity_ops.sleep_acc_thresholds(
         acc, sleep_minus_step, pc, ts_col="date_time",
         round_decimals=threshold_round_decimals,
     )
-    categorized_acc = _mat(
-        activity_ops.categorize_windows(acc, thresholds, pc, ts_col="date_time")
-    )
+    categorized_acc = activity_ops.categorize_windows(
+        acc, thresholds, pc, ts_col="date_time"
+    ).localCheckpoint(eager=False)
 
     active = categorized_acc.filter(F.col("category") != "rest").select(
         *pc, "start_time", "end_time"
     )
-    sleep_final = _mat(
-        interval_ops.subtract_intervals(
-            sleep_minus_step, active, pc, plan="auto",
-            stats_key=_stats_key("active"),
-        )
-    )
+    sleep_final = interval_ops.subtract_intervals(
+        sleep_minus_step, active, pc
+    ).localCheckpoint(eager=False)
     rest = categorized_acc.filter(F.col("category") == "rest").select(
         *pc, "start_time", "end_time"
     )
-    wake_rest = interval_ops.subtract_intervals(
-        rest, sleep_final, pc, plan="auto",
-        stats_key=_stats_key("sleep_final"),
-    )
+    wake_rest = interval_ops.subtract_intervals(rest, sleep_final, pc)
 
     final = (
         categorized_acc.filter(F.col("category") != "rest")

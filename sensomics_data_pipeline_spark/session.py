@@ -15,7 +15,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
+
+
+def _default_driver_memory() -> str:
+    """Half the host's RAM, at most 48 GiB: a heap the host can back, so
+    the JVM collects before the kernel kills it."""
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal"))
+    return f"{min(48 * 1024, total_kb // 1024 // 2)}m"
 
 
 def get_spark(
@@ -25,6 +35,10 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
+
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else the CPUs this process
+    may run on; ``spark.driver.memory`` to ``$SPARK_DRIVER_MEMORY``, else
+    half the host's RAM (at most 48 GiB).
 
     ``shuffle_partitions`` defaults to the core count: at local scale the
     stock 200 over-parallelizes tiny shuffles; on a real cluster you would
@@ -40,7 +54,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # driver testdata stores events.ts as TIMESTAMP(NANOS), which the

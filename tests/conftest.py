@@ -13,7 +13,7 @@ sys.path.insert(0, str(REPO))
 def spark():
     from sensomics_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("tests")
     yield spark
 
 

@@ -204,6 +204,46 @@ def test_subtract_intervals_matches_reference(spark, base, subs):
     assert got == want, f"base={base} subs={subs}\ngot={sorted(got)}\nwant={sorted(want)}"
 
 
+@pytest.mark.parametrize("keyed", [True, False], ids=["by_subject", "unpartitioned"])
+def test_subtract_intervals_dense_matches_reference(spark, keyed):
+    """Hundreds of sub intervals per base list: the one broadcast plan
+    matches the sequential reference. Partitioned by subject it is a
+    broadcast hash join on the key, one list per subject; without keys
+    it is a broadcast nested-loop join with the sub side as build."""
+    import random
+
+    rng = random.Random(11)
+    ivs = {}
+    for subj in ("s1", "s2", "s3") if keyed else (None,):
+        base = [(s, s + rng.randint(30, 300)) for s in rng.sample(range(3000), 8)]
+        subs = [(s, s + rng.randint(0, 12)) for s in rng.sample(range(-50, 3300), 300)]
+        ivs[subj] = (base, subs)
+    pc = ["subject"] if keyed else []
+    to_df = lambda side: spark.createDataFrame(
+        pd.DataFrame(
+            [
+                (subj, ts(s), ts(e))[1 - len(pc) :]
+                for subj, pair in ivs.items()
+                for s, e in pair[side]
+            ],
+            columns=pc + ["start_time", "end_time"],
+        )
+    )
+    out = interval_ops.subtract_intervals(to_df(0), to_df(1), pc)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    if keyed:
+        assert "BroadcastHashJoin" in plan and "BroadcastNestedLoopJoin" not in plan
+    else:
+        assert "BroadcastNestedLoopJoin" in plan and "BuildRight" in plan
+    got = {}
+    for r in out.collect():
+        key = r["subject"] if keyed else None
+        got.setdefault(key, set()).add((r["start_time"], r["end_time"]))
+    for subj, (base, subs) in ivs.items():
+        want = {(ts(s), ts(e)) for s, e in _subtract_ref(base, subs)}
+        assert got.get(subj, set()) == want, subj
+
+
 def test_merge_intervals_properties(spark):
     import random
 
@@ -364,6 +404,51 @@ def test_activity_pipeline_end_to_end(spark):
     assert (fin["start_time"] <= fin["end_time"]).all()
 
 
+_GOLDEN_DAY = pd.Timestamp("2024-03-02 00:00:00")
+
+
+def _golden_minute(m: int) -> pd.Timestamp:
+    return _GOLDEN_DAY + pd.Timedelta(minutes=m)
+
+
+#: the golden scenario's final (category, start, end) rows
+_GOLDEN_FINAL = {
+    ("high active", _golden_minute(180), _golden_minute(240)),
+    ("sleep", _golden_minute(0), _golden_minute(140)),
+    ("sleep", _golden_minute(150), _golden_minute(180)),
+    ("rest", _golden_minute(0), _golden_minute(0)),  # zero-width piece, reference parity
+    ("rest", _golden_minute(140), _golden_minute(150)),
+    ("rest", _golden_minute(240), _golden_minute(300)),
+}
+
+
+def _golden_activity_frames(spark, subjects=()):
+    """(measurements, acc) of the golden scenario, repeated for each of
+    ``subjects`` under a ``subject`` column; once, without that column,
+    when ``subjects`` is empty."""
+    keys = [(subj,) for subj in subjects] or [()]
+    meas, acc = [], []
+    for key in keys:
+        for h, total in ((1, 60.0), (2, 120.0), (3, 180.0)):
+            meas.append(key + (_golden_minute(60 * h), "sleep_total", total))
+        meas.append(key + (_golden_minute(150), "step", 240.0))
+        for m in range(300):
+            if m < 180:
+                g = [0.99, 1.0, 1.01][m % 3]
+            elif m < 240:
+                g = 2.0
+            else:
+                g = 1.0
+            acc.append(key + (_golden_minute(m), g))
+    pc = ["subject"] if subjects else []
+    return (
+        spark.createDataFrame(
+            pd.DataFrame(meas, columns=pc + ["date_time", "kind", "data"])
+        ),
+        spark.createDataFrame(pd.DataFrame(acc, columns=pc + ["date_time", "g_force"])),
+    )
+
+
 def test_activity_pipeline_golden(spark):
     """Hand-computed golden run of entry point 4: every interval
     boundary, threshold, and category verified exactly — including the
@@ -378,26 +463,7 @@ def test_activity_pipeline_golden(spark):
     sleep = [00:00,02:20]+[02:30,03:00]; wake rest = zero-width
     [00:00,00:00] + [02:20,02:30] + [04:00,05:00].
     """
-    day = pd.Timestamp("2024-03-02 00:00:00")
-    meas = []
-    for h, total in ((1, 60.0), (2, 120.0), (3, 180.0)):
-        meas.append((day + pd.Timedelta(hours=h), "sleep_total", total))
-    meas.append((day + pd.Timedelta(hours=2, minutes=30), "step", 240.0))
-    meas_df = spark.createDataFrame(
-        pd.DataFrame(meas, columns=["date_time", "kind", "data"])
-    )
-    acc = []
-    for m in range(300):
-        if m < 180:
-            g = [0.99, 1.0, 1.01][m % 3]
-        elif m < 240:
-            g = 2.0
-        else:
-            g = 1.0
-        acc.append((day + pd.Timedelta(minutes=m), g))
-    acc_df = spark.createDataFrame(
-        pd.DataFrame(acc, columns=["date_time", "g_force"])
-    )
+    meas_df, acc_df = _golden_activity_frames(spark)
     final, cat_acc, thresholds = pipelines.categorize_activity(meas_df, acc_df, [])
 
     th = thresholds.first()
@@ -408,7 +474,7 @@ def test_activity_pipeline_golden(spark):
         (r["start_time"], r["end_time"], r["category"])
         for r in cat_acc.collect()
     }
-    t = lambda m: day + pd.Timedelta(minutes=m)
+    t = _golden_minute
     assert cats == {
         (t(0), t(180), "rest"),
         (t(180), t(240), "high active"),
@@ -419,14 +485,31 @@ def test_activity_pipeline_golden(spark):
         (r["category"], r["start_time"], r["end_time"])
         for r in final.collect()
     }
-    assert got == {
-        ("high active", t(180), t(240)),
-        ("sleep", t(0), t(140)),
-        ("sleep", t(150), t(180)),
-        ("rest", t(0), t(0)),        # zero-width piece, reference parity
-        ("rest", t(140), t(150)),
-        ("rest", t(240), t(300)),
-    }
+    assert got == _GOLDEN_FINAL
+
+
+@pytest.mark.parametrize("subjects", [(), ("s1", "s2")], ids=["unpartitioned", "by_subject"])
+def test_activity_pipeline_runs_no_stats_job(spark, tmp_path, monkeypatch, subjects):
+    """Unpartitioned and partitioned by subject, the activity stage
+    builds and writes without the interval-side stats job: its three
+    subtracts have one plan, so nothing is decided from statistics.
+    Each subject gets the golden rows."""
+
+    def no_stats(*_args, **_kwargs):
+        raise AssertionError("categorize_activity ran an interval stats job")
+
+    monkeypatch.setattr(interval_ops, "_interval_side_stats", no_stats)
+    meas_df, acc_df = _golden_activity_frames(spark, subjects)
+    pc = ["subject"] if subjects else []
+    outs = pipelines.categorize_activity(meas_df, acc_df, partition_cols=pc)
+    for name, df in zip(("final", "categorized", "thresholds"), outs):
+        df.write.mode("overwrite").parquet(str(tmp_path / name))
+    got = {}
+    for r in spark.read.parquet(str(tmp_path / "final")).collect():
+        got.setdefault(r["subject"] if subjects else None, set()).add(
+            (r["category"], r["start_time"], r["end_time"])
+        )
+    assert got == {subj: _GOLDEN_FINAL for subj in subjects or (None,)}
 
 
 def _greedy_ref(tx, vx, ty, vy, tz, vz, tol_us, n):

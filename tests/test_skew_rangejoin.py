@@ -558,52 +558,26 @@ def test_auto_plan_stats_memoized_per_plan(spark):
     by (session, plan, partition cols, input files), and different
     partition keys do not share entries."""
     iv_ops._INTERVAL_STATS_MEMO.clear()
-    pts, ivs = _interval_fixture(spark)
-    s1 = iv_ops._interval_side_stats(ivs, ["user_id"])
-    assert len(iv_ops._INTERVAL_STATS_MEMO) == 1
-    s2 = iv_ops._interval_side_stats(ivs, ["user_id"])
-    assert s2 == s1 and len(iv_ops._INTERVAL_STATS_MEMO) == 1
-    s3 = iv_ops._interval_side_stats(ivs, [])
-    assert s3 == (s1[0], s1[0])  # no key: total doubles as max-per-key
-    assert len(iv_ops._INTERVAL_STATS_MEMO) == 2
-    # the memoized decision feeds the dispatcher identically
-    out = iv_ops.interval_semijoin(pts, ivs, ["user_id"], ts_col="ts",
-                                   plan="auto")
-    want = iv_ops.interval_semijoin(pts, ivs, ["user_id"], ts_col="ts")
-    assert _sorted_rows(out) == _sorted_rows(want)
-    iv_ops._INTERVAL_STATS_MEMO.clear()
-
-
-def test_auto_plan_stats_key_override(spark):
-    """``key_override`` memo-hits where the plan hash cannot: a lazily
-    localCheckpoint-ed interval side embeds a fresh RDD id per DAG
-    construction, so two rebuilds of the SAME pipeline miss the
-    plan-hash memo — the override keyed on the pure upstream identity
-    hits, and the subtract rows are identical either way (r14: the
-    activity pipeline re-paid two stats jobs per run without this)."""
-    base, sub = _subtract_fixture(spark)
-    iv_ops._INTERVAL_STATS_MEMO.clear()
-    key = ("test_override", 42)
-    # two independent checkpoint constructions of the same sub side:
-    # plan-hash keying would create two entries; the override shares one
-    s1 = iv_ops._interval_side_stats(
-        sub.localCheckpoint(eager=False), ["user_id"], key_override=key
-    )
-    s2 = iv_ops._interval_side_stats(
-        sub.localCheckpoint(eager=False), ["user_id"], key_override=key
-    )
-    assert s1 == s2 and len(iv_ops._INTERVAL_STATS_MEMO) == 1
-    got = iv_ops.subtract_intervals(
-        base, sub.localCheckpoint(eager=False), ["user_id"],
-        plan="auto", stats_key=key,
-    )
-    want = iv_ops.subtract_intervals(base, sub, ["user_id"], plan="auto")
-    assert _sorted_rows(got) == _sorted_rows(want)
-    iv_ops._INTERVAL_STATS_MEMO.clear()
+    try:
+        pts, ivs = _interval_fixture(spark)
+        s1 = iv_ops._interval_side_stats(ivs, ["user_id"])
+        assert len(iv_ops._INTERVAL_STATS_MEMO) == 1
+        s2 = iv_ops._interval_side_stats(ivs, ["user_id"])
+        assert s2 == s1 and len(iv_ops._INTERVAL_STATS_MEMO) == 1
+        s3 = iv_ops._interval_side_stats(ivs, [])
+        assert s3 == (s1[0], s1[0])  # no key: total doubles as max-per-key
+        assert len(iv_ops._INTERVAL_STATS_MEMO) == 2
+        # the memoized decision feeds the dispatcher identically
+        out = iv_ops.interval_semijoin(pts, ivs, ["user_id"], ts_col="ts",
+                                       plan="auto")
+        want = iv_ops.interval_semijoin(pts, ivs, ["user_id"], ts_col="ts")
+        assert _sorted_rows(out) == _sorted_rows(want)
+    finally:
+        iv_ops._INTERVAL_STATS_MEMO.clear()
 
 
 # ---------------------------------------------------------------------------
-# subtract_intervals plan="auto" dispatcher
+# subtract_intervals: one plan, the merged sub side broadcast
 # ---------------------------------------------------------------------------
 
 def _subtract_fixture(spark):
@@ -627,73 +601,62 @@ def _subtract_fixture(spark):
     return base, sub
 
 
-def test_subtract_auto_sparse_regime_broadcasts(spark):
-    """Small sparse sub side: auto keeps the broadcast clip join and
-    matches the legacy default byte-for-byte in values."""
-    base, sub = _subtract_fixture(spark)
-    out = iv_ops.subtract_intervals(base, sub, ["user_id"], plan="auto")
-    plan = _executed_plan(out)
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    want = iv_ops.subtract_intervals(base, sub, ["user_id"])
-    assert _sorted_rows(out) == _sorted_rows(want)
-
-
-def test_subtract_auto_dense_regime_shuffles(spark):
-    """Per-key multiplicity past the crossover: auto drops the
-    broadcast hint — the clip join becomes a shuffled equi-join on the
-    partition key (SortMergeJoin/ShuffledHashJoin, never BNLJ) with
-    identical values."""
-    base, sub = _subtract_fixture(spark)
-    out = iv_ops.subtract_intervals(
-        base, sub, ["user_id"], plan="auto", per_key_limit=1
+def _subtract_want(t0, *pieces):
+    return sorted(
+        tuple(v if isinstance(v, str) else t0 + timedelta(hours=v) for v in p)
+        for p in pieces
     )
-    plan = _executed_plan(out)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "ShuffledHashJoin" in plan
-    want = iv_ops.subtract_intervals(base, sub, ["user_id"])
-    assert _sorted_rows(out) == _sorted_rows(want)
 
 
-def test_subtract_auto_row_limit_regime_shuffles(spark):
+def test_subtract_partitioned_plans_broadcast_hash_join(spark):
+    """With partition keys the clip join is a broadcast hash join on
+    them; ``plan="auto"`` is the same plan."""
     base, sub = _subtract_fixture(spark)
-    out = iv_ops.subtract_intervals(
-        base, sub, ["user_id"], plan="auto", broadcast_row_limit=1
+    want = _subtract_want(
+        datetime(2024, 1, 1),
+        ("u1", 0, 2), ("u1", 3, 6), ("u1", 7, 8), ("u1", 10, 12), ("u2", 1, 2),
     )
-    plan = _executed_plan(out)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "ShuffledHashJoin" in plan
-    want = iv_ops.subtract_intervals(base, sub, ["user_id"])
-    assert _sorted_rows(out) == _sorted_rows(want)
+    for plan in (None, "auto"):
+        out = iv_ops.subtract_intervals(base, sub, ["user_id"], plan=plan)
+        executed = _executed_plan(out)
+        assert "BroadcastHashJoin" in executed
+        assert "BroadcastNestedLoopJoin" not in executed
+        assert _sorted_rows(out) == want
 
 
-def test_subtract_auto_no_partition_cols_pins_broadcast(spark):
+def test_subtract_no_partition_cols_plans_broadcast_nested_loop(spark):
     """Empty partition_cols: a range-only clip predicate has no
-    equi-key, so the ONLY sound shape is the broadcast nested-loop
-    with the (merged, tiny) sub side as build — auto must pin it
-    regardless of stats (even with limits forced to zero), never an
-    unhinted/shuffled NLJ."""
+    equi-key, so the plan is the broadcast nested-loop join with the
+    (merged, small) sub side as the build side."""
     base, sub = _subtract_fixture(spark)
-    b2, s2 = base.drop("user_id"), sub.drop("user_id")
-    out = iv_ops.subtract_intervals(
-        b2, s2, [], plan="auto", broadcast_row_limit=0, per_key_limit=0
+    out = iv_ops.subtract_intervals(base.drop("user_id"), sub.drop("user_id"), [])
+    executed = _executed_plan(out)
+    assert "BroadcastNestedLoopJoin" in executed and "BuildRight" in executed
+    assert _sorted_rows(out) == _subtract_want(
+        datetime(2024, 1, 1), (0, 2), (1, 2), (10, 12),
     )
-    plan = _executed_plan(out)
-    assert "BroadcastNestedLoopJoin" in plan and "BuildRight" in plan
-    want = iv_ops.subtract_intervals(b2, s2, [])
-    assert _sorted_rows(out) == _sorted_rows(want)
 
 
-def test_subtract_explicit_plans_and_rejects_unknown(spark):
+def test_subtract_rejects_unknown_plan(spark):
     base, sub = _subtract_fixture(spark)
-    want = _sorted_rows(iv_ops.subtract_intervals(base, sub, ["user_id"]))
-    got_b = iv_ops.subtract_intervals(
-        base, sub, ["user_id"], plan="broadcast"
-    )
-    got_s = iv_ops.subtract_intervals(base, sub, ["user_id"], plan="shuffle")
-    assert _sorted_rows(got_b) == want
-    assert _sorted_rows(got_s) == want
-    assert "BroadcastHashJoin" in _executed_plan(got_b)
-    assert "ShuffledHashJoin" in _executed_plan(got_s)
-    with pytest.raises(ValueError, match="unknown subtract_intervals plan"):
-        iv_ops.subtract_intervals(base, sub, ["user_id"], plan="nope")
+    for plan in ("broadcast", "shuffle", "nope"):
+        with pytest.raises(ValueError, match="unknown subtract_intervals plan"):
+            iv_ops.subtract_intervals(base, sub, ["user_id"], plan=plan)
+
+
+def test_subtract_computes_no_interval_stats(spark, monkeypatch):
+    """No plan is chosen from statistics, so neither the default nor
+    ``plan="auto"`` runs the interval-side stats job, with or without
+    partition keys."""
+
+    def no_stats(*_args, **_kwargs):
+        raise AssertionError("subtract_intervals ran an interval stats job")
+
+    monkeypatch.setattr(iv_ops, "_interval_side_stats", no_stats)
+    base, sub = _subtract_fixture(spark)
+    for plan in (None, "auto"):
+        assert iv_ops.subtract_intervals(base, sub, ["user_id"], plan=plan).count() == 5
+        unkeyed = iv_ops.subtract_intervals(
+            base.drop("user_id"), sub.drop("user_id"), [], plan=plan
+        )
+        assert unkeyed.count() == 3
