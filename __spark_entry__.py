@@ -35,6 +35,7 @@ from sensomics_data_pipeline_spark.operators import unpivot as unpivot_ops
 from sensomics_data_pipeline_spark.operators import windows as window_ops
 from sensomics_data_pipeline_spark.plans import pipelines as plan_pipelines
 from sensomics_data_pipeline_spark.sources.readers import load_table
+from sensomics_data_pipeline_spark.util import SessionMemo
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -3034,20 +3035,20 @@ FROM c
 """
 
 
+def _unpersist_corpus_pins(out: DataFrame) -> None:
+    for c in getattr(out, "_prepare_corpus_cached", ()):
+        try:
+            c.unpersist()
+        except Exception:
+            pass  # e.g. a dead session's DataFrame — nothing to free
+
+
 #: one persisted prepare_corpus plan per (application, sf_dir):
-#: corpus_pipeline (row grain, rows-only) and corpus_invariants
-#: (signature grain, full-hash) certify the SAME composed plan, so the
-#: 6-stage pipeline executes once per bench/driver run instead of twice
-#: (~9.5 s of the r4 bench was the duplicate execution). Small LRU —
-#: a harness interleaves sf dirs (bench.py warms every query at
-#: sf0.001 before timing it at sf0.1), so a single-entry cache
-#: thrashes: each warm pass would evict the timed dir's entry and
-#: force a full rebuild per run (measured 2-3× on the invariants
-#: entry). Keyed by applicationId, not id(spark): CPython reuses
-#: object ids after GC, so an id-keyed memo could hand a new session a
-#: DataFrame bound to a dead one.
-_CORPUS_MEMO: dict = {}
-_CORPUS_MEMO_MAX = 4
+#: corpus_pipeline and corpus_invariants certify the SAME composed plan,
+#: so the 6-stage pipeline executes once per bench/driver run, not
+#: twice. Four entries, because a harness interleaves sf dirs (bench.py
+#: warms at sf0.001 and times at sf0.1) and one entry would thrash.
+_CORPUS_MEMO = SessionMemo("corpus", 4, release=_unpersist_corpus_pins)
 
 
 def _prepared_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3055,17 +3056,13 @@ def _prepared_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sensomics_data_pipeline_spark.operators.corpus import prepare_corpus
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CORPUS_MEMO.get(key)
+    hit = _CORPUS_MEMO.get(spark, sf_dir)
     if hit is not None:
-        # The memoized plan is LAZY; its fan-out points (gated,
-        # survivors) carry persist() pins that fill on first execution
-        # and serve every later consumer. A harness may clearCache()
-        # between runs (bench.py does, after EVERY timed run), which
-        # de-registers those pins — the r5 memo then silently handed
-        # back a recompute-everything plan (measured pessimization).
-        # Re-persist any cleared pin: persist() only re-registers the
-        # plan, the cache refills lazily on the next action.
+        # The memoized plan is LAZY; its fan-out points carry persist()
+        # pins that a harness's clearCache() between runs de-registers,
+        # leaving a recompute-everything plan. Re-persist any cleared
+        # pin: persist() only re-registers the plan, the cache refills
+        # lazily on the next action.
         for c in getattr(hit, "_prepare_corpus_cached", ()):
             try:
                 lvl = c.storageLevel
@@ -3075,7 +3072,6 @@ def _prepared_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break  # dead session / unreachable JVM — rebuild below
         else:
             return hit
-        _CORPUS_MEMO.pop(key, None)
     from sensomics_data_pipeline_spark.operators.text import (
         eval_gram_hashes_cached,
     )
@@ -3101,14 +3097,7 @@ def _prepared_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_method="exact",
         pack_budget=512,
     )
-    while len(_CORPUS_MEMO) >= _CORPUS_MEMO_MAX:
-        old = _CORPUS_MEMO.pop(next(iter(_CORPUS_MEMO)))
-        for c in getattr(old, "_prepare_corpus_cached", ()):
-            try:
-                c.unpersist()
-            except Exception:
-                pass  # e.g. a dead session's DataFrame — nothing to free
-    _CORPUS_MEMO[key] = out
+    _CORPUS_MEMO.put(spark, sf_dir, out)  # replaces a dead hit unreleased
     return out
 
 
@@ -6012,38 +6001,31 @@ FROM cur c ANTI JOIN src s ON c.user_id = s.user_id
 #: static sides, applied to the graph harness. MEMORY_AND_DISK blocks
 #: spill rather than evict, and the module-level ref keeps them alive
 #: across bench's per-run scrub (which only clears SQL caches).
-_CLIQUE_PAIR_MEMO: dict = {}
-_CLIQUE_PAIR_MEMO_MAX = 4
+_CLIQUE_PAIR_MEMO = SessionMemo("clique_pair", 4)
 
 
 def _clique_pairs(spark: SparkSession, sf_dir: str):
     """Returns ``(pairs, n_pairs)`` — the (source, lang) clique demo
     edges as a materialized ``(src, dst)`` DataFrame plus their count,
     computed at most once per (application, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CLIQUE_PAIR_MEMO.get(key)
-    if hit is not None:
-        # LRU recency refresh (re-insert moves to the dict tail)
-        _CLIQUE_PAIR_MEMO.pop(key)
-        _CLIQUE_PAIR_MEMO[key] = hit
-        return hit
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", "lang"
-    )
-    pairs = (
-        docs.alias("a")
-        .join(docs.alias("b"), ["source", "lang"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst")
+
+    def compute():
+        docs = _t(spark, sf_dir, "documents").select(
+            "doc_id", "source", "lang"
         )
-        .localCheckpoint(eager=True)
-    )
-    val = (pairs, pairs.count())
-    while len(_CLIQUE_PAIR_MEMO) >= _CLIQUE_PAIR_MEMO_MAX:
-        _CLIQUE_PAIR_MEMO.pop(next(iter(_CLIQUE_PAIR_MEMO)))
-    _CLIQUE_PAIR_MEMO[key] = val
-    return val
+        pairs = (
+            docs.alias("a")
+            .join(docs.alias("b"), ["source", "lang"])
+            .where(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(
+                F.col("a.doc_id").alias("src"),
+                F.col("b.doc_id").alias("dst"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        return pairs, pairs.count()
+
+    return _CLIQUE_PAIR_MEMO.get_or_compute(spark, sf_dir, compute)
 
 
 def q_pagerank_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7065,8 +7047,7 @@ FROM counts
 # invariants row.
 # ---------------------------------------------------------------------------
 
-_BPE_MEMO: dict = {}
-_BPE_MEMO_MAX = 4
+_BPE_MEMO = SessionMemo("bpe", 4)
 _BPE_N_MERGES = 8
 
 
@@ -7076,18 +7057,14 @@ def _bpe_trained(spark: SparkSession, sf_dir: str):
     memo pattern; both BPE queries share one training run."""
     from sensomics_data_pipeline_spark.operators import tokenizer as tok_ops
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_MEMO.get(key)
-    if hit is not None:
-        _BPE_MEMO.pop(key)
-        _BPE_MEMO[key] = hit
-        return hit
-    docs = _t(spark, sf_dir, "documents")
-    val = tok_ops.bpe_train(spark, docs, "text", n_merges=_BPE_N_MERGES)
-    while len(_BPE_MEMO) >= _BPE_MEMO_MAX:
-        _BPE_MEMO.pop(next(iter(_BPE_MEMO)))
-    _BPE_MEMO[key] = val
-    return val
+    return _BPE_MEMO.get_or_compute(
+        spark,
+        sf_dir,
+        lambda: tok_ops.bpe_train(
+            spark, _t(spark, sf_dir, "documents"), "text",
+            n_merges=_BPE_N_MERGES,
+        ),
+    )
 
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -40,40 +40,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _clear_module_memos() -> None:
-    """Drop every module-held memo (eager-checkpoint pairs, prepared
-    corpus, ingest static sides / survivors, auto-rerank estimates).
-    Opt-in via SPARK_GRAFT_CLEAR_MEMOS=1: the default bench keeps the
-    memos (their blocks are part of the documented attribution
-    semantics — first run pays, min-of-N reads post-memo); this knob
-    exists to MEASURE whether memo-pinned executor blocks inflate
-    neighbor rows in a full-registry pass (r9 verdict ask #2)."""
-    try:
-        import __spark_entry__ as em
-
-        em._CLIQUE_PAIR_MEMO.clear()
-        em._CORPUS_MEMO.clear()
-        em._BPE_MEMO.clear()
-    except Exception:
-        pass
-    try:
-        from sensomics_data_pipeline_spark.operators import (
-            intervals,
-            similarity,
-            text,
-        )
-        from sensomics_data_pipeline_spark.streaming import ingest
-
-        similarity._AUTO_RERANK_MEMO.clear()
-        similarity._N_VECTORS_MEMO.clear()
-        intervals._INTERVAL_STATS_MEMO.clear()
-        text._EVAL_GRAM_MEMO.clear()
-        ingest._STATIC_SIDE_MEMO.clear()
-        ingest._SURVIVOR_MEMO.clear()
-    except Exception:
-        pass
-
-
 def _calibration_run(spark, n_runs: int) -> float:
     """Fixed-size synthetic aggregate (no file I/O, no Python UDF):
     20M-row codegen range-sum over 32 partitions. Its wall-time is a
@@ -196,6 +162,7 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from sensomics_data_pipeline_spark.session import get_spark
+    from sensomics_data_pipeline_spark.util import clear_memos
 
     spark = get_spark("bench")
 
@@ -232,7 +199,12 @@ def main() -> None:
     )
 
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    clear_memos = os.environ.get("SPARK_GRAFT_CLEAR_MEMOS", "") == "1"
+    # By default the session memos (util.SessionMemo) persist across
+    # runs: a memoized step's first run pays and min-of-N reads the
+    # post-memo cost. SPARK_GRAFT_CLEAR_MEMOS=1 empties them after every
+    # run, releasing the blocks they pin, to measure whether memo-pinned
+    # executor blocks inflate neighbouring rows in a full-registry pass.
+    drop_memos = os.environ.get("SPARK_GRAFT_CLEAR_MEMOS", "") == "1"
     calibration_first = _calibration_run(spark, n_runs)
     calibration_shuffle_first = _calibration_shuffle_run(spark, n_runs)
     timings: dict[str, float] = {}
@@ -257,8 +229,8 @@ def main() -> None:
                 # queries x 3 runs the un-collected debris measurably
                 # slows later queries (observed 3x inflation vs
                 # standalone runs, and the r7 registry-growth drift).
-                if clear_memos:
-                    _clear_module_memos()
+                if drop_memos:
+                    clear_memos()
                 _scrub_session(spark)
         if failed or not runs:
             timings[name] = -1.0
@@ -292,7 +264,7 @@ def main() -> None:
                 "calibration_last": calibration_last,
                 "calibration_shuffle_first": calibration_shuffle_first,
                 "calibration_shuffle_last": calibration_shuffle_last,
-                "memos_cleared": clear_memos,
+                "memos_cleared": drop_memos,
                 **({"probe": probe} if probe else {}),
             },
             separators=(",", ":"),

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sensomics_data_pipeline_spark.util import SessionMemo, plan_fingerprint
+
 
 def merge_intervals(
     df: DataFrame,
@@ -242,15 +244,7 @@ def overlap_join(
     )
 
 
-#: bounded per-session memo for the auto dispatcher's stats job —
-#: keyed (application, semanticHash(plan), partition cols, input-file
-#: fingerprint) so repeated auto calls against the same interval
-#: definition pay the agg once, and an appended/relisted input
-#: invalidates (same contract as similarity._n_vectors_cached; a file
-#: REWRITTEN in place under an unchanged name is not detected —
-#: session-static snapshot inputs assumed)
-_INTERVAL_STATS_MEMO: dict = {}
-_INTERVAL_STATS_MEMO_MAX = 8
+_INTERVAL_STATS_MEMO = SessionMemo("interval_stats", 8)
 
 
 def _interval_side_stats(
@@ -259,45 +253,27 @@ def _interval_side_stats(
     """Cheap stats the auto dispatcher decides on: (total interval
     rows, max intervals per partition key). One bounded agg job over
     the interval side only — never touches the probe table; memoized
-    per (session, plan, files) so a loop of auto calls prices the
-    decision once."""
-    try:
-        plan_key = intervals.semanticHash()
-    except Exception:
-        plan_key = None
-    key = None
-    if plan_key is not None:
-        try:
-            files_key = hash(tuple(sorted(intervals.inputFiles())))
-        except Exception:
-            files_key = None
-        key = (
-            intervals.sparkSession.sparkContext.applicationId,
-            plan_key,
-            tuple(partition_cols),
-            files_key,
-        )
-        hit = _INTERVAL_STATS_MEMO.get(key)
-        if hit is not None:
-            _INTERVAL_STATS_MEMO.pop(key)
-            _INTERVAL_STATS_MEMO[key] = hit
-            return hit
-    if partition_cols:
-        row = (
-            intervals.groupBy(*partition_cols)
-            .count()
-            .agg(F.sum("count").alias("total"), F.max("count").alias("mx"))
-            .first()
-        )
-        stats = int(row["total"] or 0), int(row["mx"] or 0)
-    else:
+    per (session, ``util.plan_fingerprint``, partition cols) so a loop
+    of auto calls prices the decision once and an appended or relisted
+    input invalidates."""
+
+    def compute() -> tuple[int, int]:
+        if partition_cols:
+            row = (
+                intervals.groupBy(*partition_cols)
+                .count()
+                .agg(F.sum("count").alias("total"), F.max("count").alias("mx"))
+                .first()
+            )
+            return int(row["total"] or 0), int(row["mx"] or 0)
         n = intervals.count()
-        stats = (n, n)
-    if key is not None:
-        while len(_INTERVAL_STATS_MEMO) >= _INTERVAL_STATS_MEMO_MAX:
-            _INTERVAL_STATS_MEMO.pop(next(iter(_INTERVAL_STATS_MEMO)))
-        _INTERVAL_STATS_MEMO[key] = stats
-    return stats
+        return n, n
+
+    fp = plan_fingerprint(intervals)
+    key = None if fp is None else (fp, tuple(partition_cols))
+    return _INTERVAL_STATS_MEMO.get_or_compute(
+        intervals.sparkSession, key, compute
+    )
 
 
 def interval_semijoin(

@@ -39,6 +39,8 @@ from collections.abc import Iterator
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sensomics_data_pipeline_spark.util import SessionMemo, plan_fingerprint
+
 
 def _norms_guarded(mat):
     """Row L2 norms clamped away from zero (1e-30): a zero vector then
@@ -257,17 +259,12 @@ def auto_rerank(
     at pathological duplicate densities (where near-dup DEDUP, not
     ANN nomination depth, is the right tool).
 
-    Cost discipline (two r9-verdict items closed here): the estimator
-    is MEMOIZED per (application, dataset plan) — ``semanticHash``
-    keys the memo, so repeated ``rerank="auto"`` calls against the
-    same corpus pay the count + sample jobs ONCE per session — and
-    the sample no longer global-sorts the full embedding column: a
-    deterministic hash-stride prefilter (``xxhash64 % stride == 0``,
-    stride sized so ~4·sample_size rows survive) prunes the corpus
-    in a shuffle-free scan, and only the survivors enter the
-    ``orderBy(hash).limit(s)`` (which Spark executes as
-    TakeOrderedAndProject over the pruned set — per-partition top-s,
-    no sort shuffle of vectors)."""
+    Cost: the estimate is memoized per (application, dataset plan),
+    so repeated ``rerank="auto"`` calls on one corpus pay the count +
+    sample jobs once per session; a shuffle-free hash-stride prefilter
+    (``xxhash64 % stride == 0``, ~4·sample_size survivors) prunes the
+    corpus before ``orderBy(hash).limit(s)``, which then runs as a
+    per-partition TakeOrderedAndProject — no sort shuffle of vectors."""
     import math
 
     floor_r = 4 * int(k)
@@ -277,80 +274,37 @@ def auto_rerank(
     except Exception:
         plan_key = None
     memo_key = (
-        v.sparkSession.sparkContext.applicationId,
-        plan_key,
-        key_col,
-        vec_col,
-        int(sample_size),
+        None
+        if plan_key is None
+        else (plan_key, key_col, vec_col, int(sample_size))
     )
-    hit = _AUTO_RERANK_MEMO.get(memo_key) if plan_key is not None else None
-    if hit is None:
-        hit = _estimate_near_tie_multiplicity(
+    hit = _AUTO_RERANK_MEMO.get_or_compute(
+        v.sparkSession,
+        memo_key,
+        lambda: _estimate_near_tie_multiplicity(
             v, key_col, vec_col, int(sample_size)
-        )
-        if plan_key is not None:
-            while len(_AUTO_RERANK_MEMO) >= _AUTO_RERANK_MEMO_MAX:
-                _AUTO_RERANK_MEMO.pop(next(iter(_AUTO_RERANK_MEMO)))
-            _AUTO_RERANK_MEMO[memo_key] = hit
-    elif plan_key is not None:
-        # LRU recency: re-insert moves the hit to the eviction tail
-        _AUTO_RERANK_MEMO.pop(memo_key)
-        _AUTO_RERANK_MEMO[memo_key] = hit
+        ),
+    )
     n, mult = hit
     if n <= 1 or mult is None:
         return floor_r
     return min(4096, max(floor_r, math.ceil(1.5 * mult)))
 
 
-#: Per-session (application, dataset-plan) memo for the auto_rerank
-#: estimator: (n, near-tie multiplicity). Bounded; values are plain
-#: Python scalars (no JVM handles to leak on eviction).
-_AUTO_RERANK_MEMO: dict = {}
-_AUTO_RERANK_MEMO_MAX = 8
-
-#: Same pattern for the LSH auto-sizer's vector COUNT (one scalar per
-#: corpus definition): repeated near-dup/semantic-dedup calls against
-#: the same plan pay the count job once per session.
-_N_VECTORS_MEMO: dict = {}
-_N_VECTORS_MEMO_MAX = 8
+#: (n, near-tie multiplicity) of the auto_rerank estimator, and the LSH
+#: auto-sizer's vector count: plain scalars, nothing to release
+_AUTO_RERANK_MEMO = SessionMemo("auto_rerank", 8)
+_N_VECTORS_MEMO = SessionMemo("n_vectors", 8)
 
 
 def _n_vectors_cached(v: DataFrame) -> int:
-    """``v.count()`` memoized per (application, semanticHash(plan),
-    input-file fingerprint) — the bounded-scalar the auto-sizing knobs
-    need, without re-running a count job on every operator call in the
-    same session.
-
-    The fingerprint (hash of the sorted ``inputFiles()`` listing — a
-    driver-side metadata call, no job) invalidates the memo when files
-    are ADDED, REMOVED or RENAMED under the same path between calls,
-    so an appended corpus re-counts instead of silently serving a
-    stale n to the LSH auto-sizer. Residual assumption, documented on
-    the public operators: a file REWRITTEN in place under the same
-    name within one session is not detected — treat inputs as
-    session-static or use fresh paths per snapshot (the normal layout
-    for immutable parquet datasets)."""
-    try:
-        plan_key = v.semanticHash()
-    except Exception:
-        plan_key = None
-    if plan_key is None:
-        return v.count()
-    try:
-        files_key = hash(tuple(sorted(v.inputFiles())))
-    except Exception:
-        files_key = None
-    key = (v.sparkSession.sparkContext.applicationId, plan_key, files_key)
-    hit = _N_VECTORS_MEMO.get(key)
-    if hit is None:
-        hit = v.count()
-        while len(_N_VECTORS_MEMO) >= _N_VECTORS_MEMO_MAX:
-            _N_VECTORS_MEMO.pop(next(iter(_N_VECTORS_MEMO)))
-        _N_VECTORS_MEMO[key] = hit
-    else:
-        _N_VECTORS_MEMO.pop(key)
-        _N_VECTORS_MEMO[key] = hit
-    return hit
+    """``v.count()`` memoized per (application, plan fingerprint): an
+    appended or relisted corpus re-counts instead of serving a stale n
+    to the LSH auto-sizer; a file rewritten in place under the same
+    name is not detected (``util.plan_fingerprint``)."""
+    return _N_VECTORS_MEMO.get_or_compute(
+        v.sparkSession, plan_fingerprint(v), v.count
+    )
 
 
 def _estimate_near_tie_multiplicity(

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sensomics_data_pipeline_spark.util import SessionMemo
+
 #: Tiny per-language marker-word profiles for the n-gram/stopword
 #: language heuristic. Deliberately minimal & deterministic.
 LANG_MARKERS = {
@@ -850,12 +852,10 @@ def eval_gram_hashes(
 #: eval gram sets are pure functions of (corpus location, source
 #: filter, text column, n) and benchmark-sized by assumption — the
 #: production pattern is compute-once-per-refresh, probe-many
-#: (contamination_probe's broadcast contract). Keyed by applicationId
-#: so a dead session's entries can never leak into a new one; small
-#: LRU for the multi-sf-dir harness pattern (bench warms at sf0.001
-#: and times at sf0.1).
-_EVAL_GRAM_MEMO: dict = {}
-_EVAL_GRAM_MEMO_MAX = 8
+#: (contamination_probe's broadcast contract). Small LRU for the
+#: multi-sf-dir harness pattern (bench warms at sf0.001 and times at
+#: sf0.1).
+_EVAL_GRAM_MEMO = SessionMemo("eval_gram", 8)
 
 
 def eval_gram_hashes_cached(
@@ -871,22 +871,11 @@ def eval_gram_hashes_cached(
     (application, definition); every later consumer — the corpus
     pipeline memo, the streaming ingest's broadcast probe, repeat
     bench runs — reuses the driver-side list."""
-    spark = eval_df.sparkSession
-    key = (spark.sparkContext.applicationId, cache_key, text_col, n)
-    hit = _EVAL_GRAM_MEMO.get(key)
-    if hit is not None:
-        # true LRU: a hit refreshes recency (dicts preserve insertion
-        # order, so re-inserting moves the entry to the tail) — without
-        # this, eviction is FIFO and a hot entry can be dropped while a
-        # cold one survives
-        _EVAL_GRAM_MEMO.pop(key)
-        _EVAL_GRAM_MEMO[key] = hit
-        return hit
-    val = eval_gram_hashes(eval_df, text_col, n)
-    while len(_EVAL_GRAM_MEMO) >= _EVAL_GRAM_MEMO_MAX:
-        _EVAL_GRAM_MEMO.pop(next(iter(_EVAL_GRAM_MEMO)))
-    _EVAL_GRAM_MEMO[key] = val
-    return val
+    return _EVAL_GRAM_MEMO.get_or_compute(
+        eval_df.sparkSession,
+        (cache_key, text_col, n),
+        lambda: eval_gram_hashes(eval_df, text_col, n),
+    )
 
 
 def contamination_probe(

@@ -152,7 +152,12 @@ def categorize_activity(
     re-derives each one's full upstream window chain per consumer — a
     ~4× stage multiplier measured at sf0.001-0.1.
     ``localCheckpoint(eager=False)`` truncates the lineage at exactly
-    those reuse seams.
+    those reuse seams. It is not free at construction: under AQE the
+    call plans the frame through ``toRdd``, so building the three
+    seams runs their upstream shuffle and broadcast stages before this
+    function returns (11 jobs and 5.3–5.8 s of one rebuild on the
+    ``pipeline_bench`` ``cohort_extracts`` inputs, 4 CPUs, against 8
+    jobs for the writes that follow).
     """
     pc = partition_cols or []
 

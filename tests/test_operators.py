@@ -4174,28 +4174,32 @@ def test_auto_rerank_memoizes_per_dataset(spark):
     base = rng.normal(0, 1, (30, 16))
     rows = [(i, [float(x) for x in base[i]]) for i in range(30)]
     schema = "vec_id long, embedding array<float>"
-    sim_mod._AUTO_RERANK_MEMO.clear()
-    df1 = spark.createDataFrame(rows, schema)
-    r1 = sim_mod.auto_rerank(df1, k=5)
-    assert len(sim_mod._AUTO_RERANK_MEMO) == 1
-    (n_memo, _mult) = next(iter(sim_mod._AUTO_RERANK_MEMO.values()))
-    assert n_memo == 30
-    # same plan -> same semanticHash -> memo hit, no new entry, same R
-    r2 = sim_mod.auto_rerank(df1, k=5)
-    assert r2 == r1 and len(sim_mod._AUTO_RERANK_MEMO) == 1
-    # different k reuses the SAME estimate (k only moves the floor)
-    r3 = sim_mod.auto_rerank(df1, k=7)
-    assert r3 >= 28 and len(sim_mod._AUTO_RERANK_MEMO) == 1
-    # a different dataset definition gets its own entry
-    df2 = spark.createDataFrame(rows[:20], schema)
-    sim_mod.auto_rerank(df2, k=5)
-    assert len(sim_mod._AUTO_RERANK_MEMO) == 2
-    # bounded: eviction keeps the memo at its cap
-    for j in range(sim_mod._AUTO_RERANK_MEMO_MAX + 2):
-        sim_mod.auto_rerank(
-            spark.createDataFrame(rows[: 5 + j], schema), k=5
-        )
-    assert len(sim_mod._AUTO_RERANK_MEMO) <= sim_mod._AUTO_RERANK_MEMO_MAX
+    memo = sim_mod._AUTO_RERANK_MEMO
+    memo.clear()
+    try:
+        df1 = spark.createDataFrame(rows, schema)
+        r1 = sim_mod.auto_rerank(df1, k=5)
+        assert len(memo) == 1
+        (n_memo, _mult) = memo.values()[0]
+        assert n_memo == 30
+        # same plan -> same semanticHash -> memo hit, no new entry, same R
+        r2 = sim_mod.auto_rerank(df1, k=5)
+        assert r2 == r1 and len(memo) == 1
+        # different k reuses the SAME estimate (k only moves the floor)
+        r3 = sim_mod.auto_rerank(df1, k=7)
+        assert r3 >= 28 and len(memo) == 1
+        # a different dataset definition gets its own entry
+        df2 = spark.createDataFrame(rows[:20], schema)
+        sim_mod.auto_rerank(df2, k=5)
+        assert len(memo) == 2
+        # bounded: eviction keeps the memo at its cap
+        for j in range(memo.max_entries + 2):
+            sim_mod.auto_rerank(
+                spark.createDataFrame(rows[: 5 + j], schema), k=5
+            )
+        assert len(memo) <= memo.max_entries
+    finally:
+        memo.clear()
 
 
 def test_ivf_assign_matches_numpy_argmax(spark):
@@ -4678,13 +4682,16 @@ def test_ewma_auto_null_values_not_counted_in_stats(spark):
     from sensomics_data_pipeline_spark.operators.analytics import ewma
 
     iv_ops._INTERVAL_STATS_MEMO.clear()
-    rows = [("u", i, float(i) if i < 5 else None) for i in range(50)]
-    df = spark.createDataFrame(rows, "u string, t int, v double")
-    out = ewma(df, ["u"], ts_col="t", value_col="v", plan="auto",
-               exact_point_limit=10, round_decimals=None)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan and "_seg" not in plan
-    assert out.count() == 5
+    try:
+        rows = [("u", i, float(i) if i < 5 else None) for i in range(50)]
+        df = spark.createDataFrame(rows, "u string, t int, v double")
+        out = ewma(df, ["u"], ts_col="t", value_col="v", plan="auto",
+                   exact_point_limit=10, round_decimals=None)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "_seg" not in plan
+        assert out.count() == 5
+    finally:
+        iv_ops._INTERVAL_STATS_MEMO.clear()
 
 
 def test_ewma_dist_block_size_rule():
