@@ -19,6 +19,9 @@ Conventions for oracle parity:
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -4226,8 +4229,8 @@ WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
 def q_ingest_dedup_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stream→batch BOUNDARY as a law (r8 verdict ask #6): the
     ingest pipeline deliberately keeps dedup batch-only (dedup needs
-    corpus-global state a shuffle-free append stream cannot hold —
-    docs/ROADMAP.md); this query certifies that the handoff loses
+    corpus-global state a shuffle-free append stream cannot hold);
+    this query certifies that the handoff loses
     nothing. The STREAMING ingest's survivor set (the memoized
     availableNow run shared with ``streaming_ingest`` — scrub →
     repetition → by-value gate →
@@ -4823,16 +4826,16 @@ def q_ewma_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ewma_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The unified ``analytics.ewma(plan="auto")`` dispatcher on the
     same per-user view-value series: one memoized per-entity count agg
-    (the shared ``_interval_side_stats`` job) picks among the three
-    certified plans by the measured regime boundaries
-    (``_ewma_choose``: exact ≤ 32k points/entity, blocked ≤ 2M,
-    distributed past). At every driver scale the series max out in the
-    tens of points per user, so auto must land on the EXACT fold —
-    certified here against the same sequential list_reduce oracle as
-    ``ewma_smooth``, raw doubles, full hash (a wrong dispatch to
-    blocked/distributed at a divergence-inducing block boundary, or
-    any stats-job perturbation of the fold input, breaks the hash).
-    Per-regime plan shape is pinned in ``tests/test_operators.py``."""
+    (the shared ``_interval_side_stats`` job) picks between the two
+    plans that win a measured regime (``_ewma_choose``: blocked ≤ 2M
+    points/entity, distributed past). At every driver scale the series
+    max out in the tens of points per user (22 at sf0.01, 27 at
+    sf0.1), inside one 256-point block, where the blocked fold IS the
+    sequential recurrence — so auto is certified here against the same
+    sequential list_reduce oracle as ``ewma_smooth``, raw doubles, full
+    hash (a wrong dispatch to distributed, or any stats-job
+    perturbation of the fold input, breaks the hash). Per-regime plan
+    shape is pinned in ``tests/test_operators.py``."""
     from sensomics_data_pipeline_spark.operators.analytics import ewma
 
     ev = _t(spark, sf_dir, "events").filter(
@@ -7312,164 +7315,35 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_pricing_summary(spark, SF0001)
 
 
+def _driver_window_order(names: list[str], root: str) -> list[str]:
+    """``names`` in driver-window order: names with no row in any
+    ``CORRECTNESS_r<N>.json`` under ``root`` first, then by the latest
+    round ``N`` with a row for the name, oldest first; ties by name.
+    A file that cannot be read, or whose name holds no round number, is
+    skipped."""
+    last_round: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        fname = os.path.basename(path)
+        try:
+            rnd = int(fname.removeprefix("CORRECTNESS_r").removesuffix(".json"))
+            with open(path) as f:
+                checked = json.load(f)
+        except (OSError, ValueError):
+            continue
+        for name in checked:
+            last_round[name] = max(last_round.get(name, 0), rnd)
+    return sorted(names, key=lambda n: (last_round.get(n, 0), n))
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver verifies the FIRST 50 entries. The
-    # window rotates by staleness, with never-checked and changed
-    # entries taking precedence. The guard test
-    # (tests/test_oracle_queries.py) derives the never-checked set from
-    # the committed CORRECTNESS_r*.json files, so a rotation cannot
-    # silently strand an unchecked query. Every entry is still
-    # value-checked locally by tools/check_oracle.py at sf0.01 and sf0.1.
-    return {
-        # ---- positions 1-45: the FULL 45-query r10-aged rotation
-        # queue from the r12 verdict / docs/ROADMAP.md:4-27, verbatim ----
-        "interval_semijoin_binned": q_interval_semijoin_binned,
-        "hh_invariants": q_hh_invariants,
-        "qsketch_invariants": q_qsketch_invariants,
-        "bloom_decon_invariants": q_bloom_decon_invariants,
-        "cms_invariants": q_cms_invariants,
-        "agg_suite": q_agg_suite,
-        "bitmap_distinct": q_bitmap_distinct,
-        "cohort_retention": q_cohort_retention,
-        "counter_reset_delta": q_counter_reset_delta,
-        "cusum_changepoint": q_cusum_changepoint,
-        "flatline_runs": q_flatline_runs,
-        "funnel": q_funnel,
-        "fuzzy_match": q_fuzzy_match,
-        "histogram": q_histogram,
-        "interpolate_linear": q_interpolate_linear,
-        "json_extract": q_json_extract,
-        "lang_id": q_lang_id,
-        "lexical_stats": q_lexical_stats,
-        "mad_outliers": q_mad_outliers,
-        "overlap_join": q_overlap_join,
-        "quality_gate": q_quality_gate,
-        "semi_anti_join": q_semi_anti_join,
-        "table_diff": q_table_diff,
-        "threshold_rules": q_threshold_rules,
-        "topk_per_group": q_topk_per_group,
-        "trend_slope": q_trend_slope,
-        "unpivot_wide": q_unpivot_wide,
-        "weighted_sample": q_weighted_sample,
-        "corpus_pipeline": q_corpus_pipeline,
-        "corpus_invariants": q_corpus_invariants,
-        "activity_pipeline": q_activity_pipeline,
-        "ivf_invariants": q_ivf_invariants,
-        "ivf_pq_invariants": q_ivf_pq_invariants,
-        "bm25_topk": q_bm25_topk,
-        "skew_salted_agg": q_skew_salted_agg,
-        "transition_matrix": q_transition_matrix,
-        "bloom_join_reduce": q_bloom_join_reduce,
-        "streaming_ingest": q_streaming_ingest,
-        "ingest_dedup_handoff": q_ingest_dedup_handoff,
-        "pagerank_invariants": q_pagerank_invariants,
-        "ppr_invariants": q_ppr_invariants,
-        "embedding_pq": q_embedding_pq,
-        "embedding_ivf": q_embedding_ivf,
-        "embedding_ivf_pq": q_embedding_ivf_pq,
-        "ann_invariants": q_ann_invariants,
-        # ---- NEW in r13 (never driver-checked) ----
-        "ewma_auto": q_ewma_auto,
-        "bpe_batch8_law": q_bpe_batch8_law,
-        # ---- fill: changed-surface entries ----
-        "interval_subtract": q_interval_subtract,
-        "ewma_distributed": q_ewma_distributed,
-        # ---- positions 51+: the r14 staleness queue — r11-checked
-        # entries first (stalest after this round), then r12-checked ----
-        "above_cust_avg": q_above_cust_avg,
-        "char_diversity": q_char_diversity,
-        "chunk_documents": q_chunk_documents,
-        "cube_agg": q_cube_agg,
-        "distribution_drift": q_distribution_drift,
-        "domain_mix": q_domain_mix,
-        "entity_resolution": q_entity_resolution,
-        "feature_scaling": q_feature_scaling,
-        "holdout_split": q_holdout_split,
-        "interval_merge": q_interval_merge,
-        "join_revenue_by_nation": q_join_revenue_by_nation,
-        "kmeans_invariants": q_kmeans_invariants,
-        "lag_dedup": q_lag_dedup,
-        "map_functions": q_map_functions,
-        "merge_idempotency": q_merge_idempotency,
-        "merge_upsert": q_merge_upsert,
-        "ngram_jaccard": q_ngram_jaccard,
-        "pack_invariants": q_pack_invariants,
-        "paragraph_dedup": q_paragraph_dedup,
-        "profile_table": q_profile_table,
-        "repetition_signals": q_repetition_signals,
-        "resample_ffill": q_resample_ffill,
-        "rolling_1h": q_rolling_1h,
-        "scalar_functions": q_scalar_functions,
-        "sessionization": q_sessionization,
-        "set_ops": q_set_ops,
-        "simhash": q_simhash,
-        "stack_split": q_stack_split,
-        "stats_suite": q_stats_suite,
-        "stratified_sample": q_stratified_sample,
-        "streaming_corpus": q_streaming_corpus,
-        "streaming_sessions": q_streaming_sessions,
-        "streaming_stateful_dedup": q_streaming_stateful_dedup,
-        "text_quality": q_text_quality,
-        "top1_per_group": q_top1_per_group,
-        "top_orders_limit": q_top_orders_limit,
-        "vocab_topk": q_vocab_topk,
-        "window_analytics": q_window_analytics,
-        "reformat_pipeline": q_reformat_pipeline,
-        "ewma_smooth": q_ewma_smooth,
-        "pmi_collocations": q_pmi_collocations,
-        "skew_salted_join": q_skew_salted_join,
-        "dq_report": q_dq_report,
-        # ---- r12-checked tail ----
-        "zorder_curve": q_zorder_curve,
-        "duplicate_spans": q_duplicate_spans,
-        "pack_sequences": q_pack_sequences,
-        "embedding_centroids": q_embedding_centroids,
-        "embedding_topk": q_embedding_topk,
-        "embedding_lsh": q_embedding_lsh,
-        "embedding_near_dup_exact": q_embedding_near_dup_exact,
-        "semantic_dedup": q_semantic_dedup,
-        "exact_dedup": q_exact_dedup,
-        "decontaminate": q_decontaminate,
-        "doc_fingerprint": q_doc_fingerprint,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "simhash_pairs": q_simhash_pairs,
-        "token_stats": q_token_stats,
-        "pivot_wide": q_pivot_wide,
-        "posexplode_resample": q_posexplode_resample,
-        "chain_distances": q_chain_distances,
-        "hll_distinct": q_hll_distinct,
-        "triangle_counts": q_triangle_counts,
-        "kcore_members": q_kcore_members,
-        "hll_rollup": q_hll_rollup,
-        "label_propagation": q_label_propagation,
-        "bfs_distances": q_bfs_distances,
-        "sssp_distances": q_sssp_distances,
-        "pq_invariants": q_pq_invariants,
-        "multimodal_frames": q_multimodal_frames,
-        "pricing_summary": q_pricing_summary,
-        "quantiles": q_quantiles,
-        "rollup_revenue": q_rollup_revenue,
-        "asof_join": q_asof_join,
-        "interval_semijoin": q_interval_semijoin,
-        "merge_windows": q_merge_windows,
-        "tumbling_categorize": q_tumbling_categorize,
-        "streaming_tumbling": q_streaming_tumbling,
-        "streaming_anomalies": q_streaming_anomalies,
-        "scd2_history": q_scd2_history,
-        "minhash_lsh": q_minhash_lsh,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_incremental": q_dedup_incremental,
-        "remove_dup_spans": q_remove_dup_spans,
-        "interval_semijoin_auto": q_interval_semijoin_auto,
-        "bpe_batched_law": q_bpe_batched_law,
-        "ewma_blocked": q_ewma_blocked,
-        "filtering_pipeline": q_filtering_pipeline,
-        "theta_sketch_ops": q_theta_sketch_ops,
-        "streaming_theta": q_streaming_theta,
-        "bpe_merges": q_bpe_merges,
-        "bpe_token_stats": q_bpe_token_stats,
-        "embedding_near_dup": q_embedding_near_dup,
-    }
+    """Every module-level ``q_<name>`` function, keyed ``<name>``. The
+    driver verifies the FIRST 50 entries, so the order rotates by
+    staleness against the committed ``CORRECTNESS_r*.json`` files
+    (:func:`_driver_window_order`). Every entry is still value-checked
+    locally by tools/check_oracle.py at sf0.01 and sf0.1."""
+    fns = {name[2:]: fn for name, fn in globals().items() if name.startswith("q_")}
+    here = os.path.dirname(os.path.abspath(__file__))
+    return {name: fns[name] for name in _driver_window_order(list(fns), here)}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -7512,8 +7386,8 @@ def oracle_sql() -> dict[str, str]:
         "merge_windows": _SQL_MERGE_WINDOWS,
         "interval_merge": _SQL_INTERVAL_MERGE,
         "interval_subtract": _SQL_INTERVAL_SUBTRACT,
-        # ewma_auto lands on the exact regime at driver scales — same
-        # sequential fold oracle
+        # ewma_auto lands on the blocked plan at driver scales, whose
+        # series fit one block — same sequential fold oracle
         "ewma_auto": _SQL_EWMA,
         "bpe_batch8_law": _SQL_BPE_BATCH8_LAW,
         "streaming_tumbling": _SQL_STREAMING_TUMBLING,

@@ -757,28 +757,19 @@ def ewma_smooth_distributed(
     return out
 
 
-def _ewma_choose(
-    max_per_entity: int,
-    exact_point_limit: int,
-    blocked_point_limit: int,
-) -> str:
+def _ewma_choose(max_per_entity: int, blocked_point_limit: int) -> str:
     """Pure plan rule for :func:`ewma` — split out so tests can pin the
-    regime boundaries without running a stats job.
+    regime boundary without running a stats job.
 
-    The thresholds encode the measured contracts of the three plans
-    (``docs/SCALE_r12.md`` / ``SCALE_r13.md``): the exact fold is
-    O(n²) element copies per entity (measured ~15× per 4× step —
-    usable to a few 10⁴ points), the blocked fold is linear but holds
-    a whole entity in ONE collect_list row (measured linear through
-    2.56 M points/entity; the bound is executor row budget, not
-    compute), and the distributed plan has no per-entity memory bound
-    at the price of two extra shuffles.
+    Only plans that win a measured regime are dispatched
+    (``docs/SCALE_r13.md``): the blocked fold beat the exact fold at
+    every measured size (1.67 vs 2.77 s at 2.5k points/entity, 1.52 vs
+    36.65 s at 40k) and is linear but holds a whole entity in ONE
+    collect_list row (measured linear through 2.56 M points/entity; the
+    bound is executor row budget, not compute); the distributed plan
+    has no per-entity memory bound at the price of two extra shuffles.
     """
-    if max_per_entity <= exact_point_limit:
-        return "exact"
-    if max_per_entity <= blocked_point_limit:
-        return "blocked"
-    return "distributed"
+    return "blocked" if max_per_entity <= blocked_point_limit else "distributed"
 
 
 def _ewma_dist_block_size(max_per_entity: int) -> int:
@@ -805,7 +796,6 @@ def ewma(
     block_size: int | None = None,
     round_decimals: int | None = 6,
     plan: str = "auto",
-    exact_point_limit: int = 32_768,
     blocked_point_limit: int = 2_000_000,
 ) -> DataFrame:
     """One EWMA entry point over the three certified plans —
@@ -814,8 +804,9 @@ def ewma(
     (no per-entity memory bound), chosen by ``plan``:
 
     - ``"exact"`` / ``"blocked"`` / ``"distributed"``: explicit.
-    - ``"auto"`` (default): one cheap per-entity count agg over
-      ``df`` decides by :func:`_ewma_choose` — the same
+    - ``"auto"`` (default): blocked up to ``blocked_point_limit``
+      points per entity, distributed past it. One cheap per-entity
+      count agg over ``df`` decides by :func:`_ewma_choose` — the same
       memoized-stats contract as ``interval_semijoin(plan="auto")``
       (the stats job is :func:`operators.intervals._interval_side_stats`,
       shared memo and all: keyed on (session, semantic plan hash,
@@ -844,9 +835,7 @@ def ewma(
         _total, max_per_entity = _interval_side_stats(
             df.filter(F.col(value_col).isNotNull()), group_cols
         )
-        plan = _ewma_choose(
-            max_per_entity, exact_point_limit, blocked_point_limit
-        )
+        plan = _ewma_choose(max_per_entity, blocked_point_limit)
         if plan == "distributed" and block_size is None:
             # auto knows the series length — size the segments by the
             # copy-count minimizer instead of the static plan default

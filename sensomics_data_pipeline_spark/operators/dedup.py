@@ -578,19 +578,6 @@ def minhash_wide(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """Long-format (doc_id, seed, minhash) view of ``minhash_wide``."""
-    return minhash_wide(df, key_col, text_col, n, num_hashes).select(
-        "doc_id", F.posexplode("mhs").alias("seed", "minhash")
-    )
-
-
 def _band_explode(
     signatures: DataFrame,
     band_size: int,
@@ -618,33 +605,6 @@ def _band_explode(
     return signatures.select(
         "doc_id", *carry, F.explode(bands).alias("b")
     ).select("doc_id", *carry, "b.band", "b.band_sig")
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    band_size: int = 4,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """LSH banding over wide signatures: slice the signature array into
-    bands of ``band_size``, stringify each band, explode to
-    (doc, band, band_sig), equi-join on (band, band_sig) — never an
-    all-pairs scan. Input: ``minhash_wide`` output (doc_id, mhs).
-    """
-    banded = _band_explode(signatures, band_size, num_hashes, [])
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
 
 
 def _capped_bucket_pairs(

@@ -1,4 +1,4 @@
-"""Filter operators: range filters, threshold rules, flatline RLE
+"""Filter operators: threshold rules, flatline RLE
 (SURVEY.md §2.2 P5-P10, §2.5 A5).
 """
 
@@ -16,31 +16,6 @@ DEFAULT_THRESHOLDS = {
     "spo2": (80.0, 1_000_000.0),
     "st": (30.0, 1_000_000.0),
 }
-
-
-def range_filter(
-    df: DataFrame,
-    kind: str,
-    min_val: float = 0.0,
-    max_val: float = 1_000_000.0,
-    keep_na: bool = False,
-    replace: bool = False,
-    kind_col: str = "kind",
-    value_col: str = "data",
-) -> DataFrame:
-    """P5: per-kind BETWEEN filter with NULL policy
-    (``subset_df``, ``/root/reference/filtering_data.py:75-85``).
-
-    ``replace=True`` in the reference filters the subset then concats it
-    back — here that is a single conditional predicate (no union, no
-    second pass): rows of other kinds pass through untouched.
-    """
-    in_range = F.col(value_col).between(min_val, max_val)
-    if keep_na:
-        in_range = in_range | F.col(value_col).isNull() | F.isnan(value_col)
-    if replace:
-        return df.filter((F.col(kind_col) != kind) | in_range)
-    return df.filter((F.col(kind_col) == kind) & in_range)
 
 
 def apply_threshold_rules(
@@ -121,11 +96,7 @@ def flatline_runs(
     )
 
 
-def include_intervals(
-    runs: DataFrame,
-    partition_cols: list[str],
-    max_run: int = 20,
-) -> DataFrame:
+def include_intervals(runs: DataFrame, partition_cols: list[str]) -> DataFrame:
     """Collapse per-run rows into the reference's coarse include/exclude
     interval list (``t_incl`` output shape, ``filtering_data.py:98-110``):
     adjacent runs with the same include flag merge into one interval.

@@ -32,7 +32,6 @@ reads metadata.
 from __future__ import annotations
 
 import hashlib
-import zlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
@@ -166,29 +165,6 @@ def sample_frames(
                         + (fno, frame, hashlib.md5(frame).hexdigest())
                     )
             yield pd.DataFrame(rows, columns=keep_cols + ["frame_no", "frame", "frame_md5"])
-
-    return df.mapInPandas(run, out_schema)
-
-
-def resize_stub(
-    df: DataFrame, payload_col: str = "payload", target: tuple[int, int] = (64, 64)
-) -> DataFrame:
-    """Resize stand-in: real impl decodes + resamples; the stub
-    deterministically re-compresses the payload (zlib) so output bytes
-    change shape-appropriately and are reproducible."""
-    fields = [f for f in df.schema.fields]
-    out_schema = T.StructType(
-        fields + [T.StructField("resized", T.BinaryType(), True)]
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["resized"] = [
-                zlib.compress(p or b"", level=1)[: target[0] * target[1]]
-                for p in pdf[payload_col]
-            ]
-            yield pdf
 
     return df.mapInPandas(run, out_schema)
 

@@ -4570,21 +4570,23 @@ def test_theta_union_associative_with_trim(spark):
 # ---------------------------------------------------------------------------
 
 def test_ewma_choose_regime_boundaries():
-    """The pure plan rule: exact up to and including exact_point_limit,
-    blocked up to and including blocked_point_limit, distributed past."""
+    """The pure plan rule: blocked up to and including
+    blocked_point_limit, distributed past; the exact fold is never
+    dispatched."""
     from sensomics_data_pipeline_spark.operators.analytics import _ewma_choose
 
-    assert _ewma_choose(0, 100, 1000) == "exact"
-    assert _ewma_choose(100, 100, 1000) == "exact"
-    assert _ewma_choose(101, 100, 1000) == "blocked"
-    assert _ewma_choose(1000, 100, 1000) == "blocked"
-    assert _ewma_choose(1001, 100, 1000) == "distributed"
+    assert _ewma_choose(0, 1000) == "blocked"
+    assert _ewma_choose(100, 1000) == "blocked"
+    assert _ewma_choose(1000, 1000) == "blocked"
+    assert _ewma_choose(1001, 1000) == "distributed"
 
 
-def test_ewma_auto_small_entity_picks_exact_plan(spark):
-    """Auto on a small-entity table dispatches the exact fold: the
-    executed plan has NO join (blocked has none either, but exact also
-    has no _seg regroup) and values equal ewma_smooth bit-for-bit."""
+def test_ewma_auto_small_entity_picks_blocked_plan(spark):
+    """Auto on a small-entity table dispatches the blocked fold: the
+    executed plan has NO join and no _seg regroup (both distributed
+    only) but the per-block _blk structure (blocked only). A series of
+    at most block_size points is one block, so values equal the exact
+    ewma_smooth bit-for-bit."""
     from sensomics_data_pipeline_spark.operators.analytics import (
         ewma,
         ewma_smooth,
@@ -4595,7 +4597,7 @@ def test_ewma_auto_small_entity_picks_exact_plan(spark):
     kw = dict(ts_col="t", value_col="v", round_decimals=None)
     out = ewma(df, ["u"], plan="auto", **kw)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan and "_seg" not in plan
+    assert "Join" not in plan and "_seg" not in plan and "_blk" in plan
     want = {(r["u"], r["t"]): r["ewma"]
             for r in ewma_smooth(df, ["u"], **kw).collect()}
     got = {(r["u"], r["t"]): r["ewma"] for r in out.collect()}
@@ -4603,9 +4605,9 @@ def test_ewma_auto_small_entity_picks_exact_plan(spark):
 
 
 def test_ewma_auto_mid_entity_picks_blocked_plan(spark):
-    """Forcing the exact limit below the entity size dispatches the
-    blocked plan (no join, but per-block structure), bit-equal to
-    ewma_smooth_blocked at the same block size."""
+    """An entity longer than one block dispatches the blocked plan (no
+    join, but per-block structure), bit-equal to ewma_smooth_blocked at
+    the same block size."""
     from sensomics_data_pipeline_spark.operators.analytics import (
         ewma,
         ewma_smooth_blocked,
@@ -4614,8 +4616,7 @@ def test_ewma_auto_mid_entity_picks_blocked_plan(spark):
     rows = [("u", i, float(i % 5)) for i in range(30)]
     df = spark.createDataFrame(rows, "u string, t int, v double")
     kw = dict(ts_col="t", value_col="v", round_decimals=None)
-    out = ewma(df, ["u"], plan="auto", exact_point_limit=10,
-               block_size=8, **kw)
+    out = ewma(df, ["u"], plan="auto", block_size=8, **kw)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     want = {(r["u"], r["t"]): r["ewma"]
@@ -4626,7 +4627,7 @@ def test_ewma_auto_mid_entity_picks_blocked_plan(spark):
 
 
 def test_ewma_auto_huge_entity_picks_distributed_plan(spark):
-    """Forcing both limits below the entity size dispatches the
+    """Forcing the blocked limit below the entity size dispatches the
     distributed plan — the only one with a carry JOIN and a _seg
     regroup — bit-equal to ewma_smooth_distributed."""
     from sensomics_data_pipeline_spark.operators.analytics import (
@@ -4637,8 +4638,8 @@ def test_ewma_auto_huge_entity_picks_distributed_plan(spark):
     rows = [("u", i, float(i % 5)) for i in range(30)]
     df = spark.createDataFrame(rows, "u string, t int, v double")
     kw = dict(ts_col="t", value_col="v", round_decimals=None)
-    out = ewma(df, ["u"], plan="auto", exact_point_limit=4,
-               blocked_point_limit=8, block_size=8, **kw)
+    out = ewma(df, ["u"], plan="auto", blocked_point_limit=8,
+               block_size=8, **kw)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "_seg" in plan
     want = {(r["u"], r["t"]): r["ewma"]
@@ -4676,7 +4677,7 @@ def test_ewma_explicit_plans_and_rejects_unknown(spark):
 
 def test_ewma_auto_null_values_not_counted_in_stats(spark):
     """The stats job filters NULL values first — an entity with many
-    NULL readings and few real points must still land in the exact
+    NULL readings and few real points must still land in the blocked
     regime (NULLs never reach the fold)."""
     from sensomics_data_pipeline_spark.operators import intervals as iv_ops
     from sensomics_data_pipeline_spark.operators.analytics import ewma
@@ -4686,7 +4687,7 @@ def test_ewma_auto_null_values_not_counted_in_stats(spark):
         rows = [("u", i, float(i) if i < 5 else None) for i in range(50)]
         df = spark.createDataFrame(rows, "u string, t int, v double")
         out = ewma(df, ["u"], ts_col="t", value_col="v", plan="auto",
-                   exact_point_limit=10, round_decimals=None)
+                   blocked_point_limit=10, round_decimals=None)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in plan and "_seg" not in plan
         assert out.count() == 5

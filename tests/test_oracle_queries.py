@@ -80,6 +80,43 @@ def test_every_query_has_oracle_or_is_flagged():
     )
 
 
+def test_queries_are_the_q_functions():
+    import inspect
+
+    q_fns = {
+        name[2:]: fn
+        for name, fn in inspect.getmembers(entrymod, inspect.isfunction)
+        if name.startswith("q_") and fn.__module__ == entrymod.__name__
+    }
+    assert entrymod.queries() == q_fns
+
+
+def test_driver_window_order(tmp_path):
+    """Never-checked names first, then the oldest latest round, ties by
+    name; a name's latest round wins over earlier ones, and a file that
+    is unreadable or names no round counts for nothing."""
+    import json
+
+    files = {
+        "CORRECTNESS_r2.json": {"b": {}, "c": {}, "d": {}},
+        "CORRECTNESS_r9.json": {"a": {}, "b": {}},
+        "CORRECTNESS_r10.json": {"e": {}},
+    }
+    for fname, rows in files.items():
+        (tmp_path / fname).write_text(json.dumps(rows))
+    (tmp_path / "CORRECTNESS_r11.json").write_text("{not json")
+    (tmp_path / "CORRECTNESS_r12_extra.json").write_text('{"never_y": {}}')
+    names = ["e", "d", "c", "b", "a", "never_z", "never_y"]
+    assert entrymod._driver_window_order(names, str(tmp_path)) == [
+        # no row in a readable round file: r11 is not JSON, and
+        # r12_extra names no round
+        "never_y", "never_z",
+        "c", "d",  # r2, tie by name
+        "a", "b",  # r9 (b's r2 row is superseded)
+        "e",  # r10: numeric, not lexical, round order
+    ]
+
+
 @pytest.mark.parametrize("name", list(entrymod.queries()))
 def test_query_matches_oracle(spark, duck, sf_dir, name):
     fn = entrymod.queries()[name]

@@ -73,6 +73,33 @@ def test_reformat_raw_unpivot(spark):
     assert row["date"] is not None and row["time"].startswith("08:00:00")
 
 
+def test_read_raw_json_reads_each_file_as_one_document(spark, tmp_path):
+    """An upload is one JSON array however it is laid out, as the
+    reference's per-file ``pd.read_json`` reads it: a pretty-printed file
+    and a single-line file in one directory give back exactly their
+    records."""
+    from sensomics_data_pipeline_spark.sources.readers import read_raw_json
+
+    recs = [
+        {"time": t, "kind": k, "data": json.loads(d)} for t, k, d in _raw_rows()
+    ]
+    pretty, flat = recs[:5], recs[5:]
+    (tmp_path / "upload 2024-03-01 08-00-00.json").write_text(
+        json.dumps(pretty, indent=1)
+    )
+    (tmp_path / "upload 2024-03-01 09-00-00.json").write_text(json.dumps(flat))
+    rows = read_raw_json(spark, str(tmp_path)).collect()
+    assert len(rows) == len(recs)
+    got = sorted(
+        (r["time"], r["kind"], json.loads(r["data"]), r["jname"]) for r in rows
+    )
+    want = sorted(
+        [(r["time"], r["kind"], r["data"], "2024-03-01 08-00-00") for r in pretty]
+        + [(r["time"], r["kind"], r["data"], "2024-03-01 09-00-00") for r in flat]
+    )
+    assert got == want
+
+
 def test_clock_skew_quantization(spark):
     """Skew = round(Δ/900000)*900000 — 15-minute steps
     (raw_data_reformat.py:47)."""
