@@ -27,7 +27,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sensomics_data_pipeline_spark.operators import acc as acc_ops
 from sensomics_data_pipeline_spark.operators import activity as activity_ops
 from sensomics_data_pipeline_spark.operators import dedup as dedup_ops
 from sensomics_data_pipeline_spark.operators import filters as filter_ops
@@ -7315,12 +7314,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_pricing_summary(spark, SF0001)
 
 
-def _driver_window_order(names: list[str], root: str) -> list[str]:
-    """``names`` in driver-window order: names with no row in any
-    ``CORRECTNESS_r<N>.json`` under ``root`` first, then by the latest
-    round ``N`` with a row for the name, oldest first; ties by name.
-    A file that cannot be read, or whose name holds no round number, is
-    skipped."""
+def _driver_last_rounds(root: str) -> dict[str, int]:
+    """{name: latest round ``N``} over the ``CORRECTNESS_r<N>.json`` files
+    under ``root``. A file that cannot be read, or whose name holds no
+    round number, is skipped."""
     last_round: dict[str, int] = {}
     for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         fname = os.path.basename(path)
@@ -7332,6 +7329,14 @@ def _driver_window_order(names: list[str], root: str) -> list[str]:
             continue
         for name in checked:
             last_round[name] = max(last_round.get(name, 0), rnd)
+    return last_round
+
+
+def _driver_window_order(names: list[str], root: str) -> list[str]:
+    """``names`` in driver-window order: names with no row in any
+    ``CORRECTNESS_r<N>.json`` under ``root`` first, then by the latest
+    round ``N`` with a row for the name, oldest first; ties by name."""
+    last_round = _driver_last_rounds(root)
     return sorted(names, key=lambda n: (last_round.get(n, 0), n))
 
 

@@ -10,7 +10,8 @@ analysis, multimodal plumbing) that a 100-TB Spark deployment needs.
 Design principles (see SURVEY.md):
 - DataFrame/SQL first: every operator is a composition of Catalyst-
   optimizable built-ins; ``applyInPandas`` only where semantics are
-  irreducibly sequential (greedy accelerometer alignment parity mode).
+  irreducibly sequential (the greedy accelerometer alignment that the
+  parity tests compare against; no pipeline runs it).
 - Fixed schemas, no inference in production paths (``schemas.py``).
 - Partition-aware: window functions always take explicit partition keys;
   small sides of range joins are broadcast; sinks partition by date.

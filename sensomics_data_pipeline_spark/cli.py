@@ -3,7 +3,7 @@
 
     python -m sensomics_data_pipeline_spark.cli reformat  -d RAW_JSON_DIR -o OUT [-t DIFF_MS | -e EXCEL_EPOCH_S]
     python -m sensomics_data_pipeline_spark.cli filter    -i MEASUREMENTS -o OUT
-    python -m sensomics_data_pipeline_spark.cli acc       -i AC_EXTRACT -o OUT [--greedy]
+    python -m sensomics_data_pipeline_spark.cli acc       -i AC_EXTRACT -o OUT
     python -m sensomics_data_pipeline_spark.cli activity  -i MEASUREMENTS -a ACC -o OUT
     python -m sensomics_data_pipeline_spark.cli analytics {funnel,retention,trend,cusum} -i EVENTS -o OUT
     python -m sensomics_data_pipeline_spark.cli diff      -i BASE -b CAND -o OUT --key k1,k2
@@ -129,7 +129,7 @@ def cmd_acc(args) -> int:
 
     spark = _spark()
     ac = spark.read.parquet(args.input)
-    out = reformat_acc(ac, greedy_parity=args.greedy, bin_seconds=args.binsize)
+    out = reformat_acc(ac, bin_seconds=args.binsize)
     if _apply_dq_gate(out, getattr(args, "dq_gate", None), spark):
         return 1
     out.write.mode("overwrite").parquet(args.out)
@@ -493,7 +493,6 @@ def main(argv=None) -> int:
     a.add_argument("-i", "--input", required=True)
     a.add_argument("-o", "--out", required=True)
     a.add_argument("-b", "--binsize", type=int, default=300)
-    a.add_argument("--greedy", action="store_true", help="exact greedy parity plan")
     a.add_argument("--dq-gate", action="append", default=None,
                    metavar="CHECK",
                    help="declared check (not_null:COL | range:COL:LO:HI | "

@@ -2,24 +2,23 @@
 §2.3 R6/R7).
 
 The reference aligns the acx/acy/acz streams with an O(n³) greedy
-candidate search (``/root/reference/acc_reformat.py:136-215``), then
-rebuilds rows one-by-one with O(n²) concat (``:118-131``). Two plans:
+candidate search (``acc_reformat.py:136-215``), then rebuilds rows
+one-by-one with O(n²) concat (``:118-131``). Here:
 
-- **Plan A (default, scalable)** ``align_axes``: tolerance-bucketed
-  as-of alignment — round each timestamp to the 0.5 s match tolerance,
-  pivot the three axes onto one row per bucket. Linear, shuffle-on-bucket,
-  no Python. Semantics: rows align when their timestamps fall in the
-  same 0.5 s bucket (the reference's pairwise |Δt| ≤ 0.5 s check,
-  ``:136-143``); unmatched samples drop, mirroring the greedy skip.
-- **Plan B (parity)** ``align_axes_greedy``: exact reference greedy
-  drop-order, per session/day group via ``applyInPandas`` — the
-  algorithm is inherently sequential; partition by (subject, date) so
-  state never crosses partitions.
+- ``align_axes`` (the pipeline's one plan): a triple is an island of axis
+  records. A record more than half the 0.5 s match tolerance after the
+  previous record of its partition starts a new triple
+  (``windows.sessionize``), so a triple pairs by its own timestamps
+  wherever it falls against the clock. One value per axis; islands
+  missing an axis drop, mirroring the greedy skip of unmatched samples.
+  Built-ins only, no Python.
+- ``align_axes_greedy`` (reference parity, for tests): the exact greedy
+  drop-order per group via ``applyInPandas``; the tests compare
+  ``align_axes`` against it.
 
 NOTE reference bug (documented, SURVEY.md §2.4): ``xyz_match`` computes
 the y–z distance twice and never checks x–z (``acc_reformat.py:138-139``).
-Plan B replicates it behind ``replicate_xz_bug=True`` for golden parity;
-Plan A's bucket semantics supersede it.
+``align_axes_greedy`` replicates it for golden parity.
 """
 
 from __future__ import annotations
@@ -31,6 +30,11 @@ from sensomics_data_pipeline_spark.functions.scalars import g_force
 from sensomics_data_pipeline_spark.functions.timeops import second_of_day
 from sensomics_data_pipeline_spark.operators.windows import sessionize
 
+#: The reference's pairwise match tolerance (``acc_reformat.py:136-143``);
+#: also the triple cadence and the step of the 10 Hz session grid.
+TOLERANCE_S = 0.5
+AXES = ("acx", "acy", "acz")
+
 
 def align_axes(
     ac: DataFrame,
@@ -38,42 +42,34 @@ def align_axes(
     ts_col: str = "date_time",
     kind_col: str = "kind",
     value_col: str = "data",
-    tolerance_s: float = 0.5,
 ) -> DataFrame:
-    """Plan A: bucket-pivot 3-axis alignment (J1 + R6).
+    """J1 + R6: one row per triple, stamped with the triple's earliest
+    record time, with the earliest value of each axis (duplicate reports
+    inside a triple are dropped). Triples missing an axis are dropped,
+    like the reference's greedy skip of unmatched samples.
 
-    ``groupBy(bucket).pivot(kind)`` — the long→wide axis assembly
-    (``acc_reformat.py:118-131``) fused with the alignment. ``first()``
-    per bucket per axis (ties are duplicate reports inside the
-    tolerance). Rows missing any axis are dropped, like the reference's
-    greedy skip of unmatched samples.
+    A triple is an island of records no more than ``TOLERANCE_S / 2``
+    apart: lag + running sum over the partition, then one aggregate
+    keyed by the island.
     """
-    bucket = F.floor(
-        F.unix_micros(F.col(ts_col)) / int(tolerance_s * 1_000_000)
-    ).alias("_bucket")
-    wide = (
-        ac.select(*partition_cols, bucket, ts_col, kind_col, value_col)
-        .groupBy(*partition_cols, "_bucket")
-        .pivot(kind_col, ["acx", "acy", "acz"])
-        .agg(F.first(value_col))
-        .withColumn(
-            ts_col,
-            F.timestamp_micros(
-                (F.col("_bucket") * int(tolerance_s * 1_000_000)).cast("long")
-            ),
-        )
-        .drop("_bucket")
+    islands = sessionize(ac, partition_cols, ts_col, TOLERANCE_S / 2, "_triple")
+    wide = islands.groupBy(*partition_cols, "_triple").agg(
+        F.min(ts_col).alias(ts_col),
+        *(
+            F.min_by(value_col, F.when(F.col(kind_col) == a, F.col(ts_col))).alias(a)
+            for a in AXES
+        ),
     )
     return wide.filter(
         F.col("acx").isNotNull() & F.col("acy").isNotNull() & F.col("acz").isNotNull()
-    )
+    ).drop("_triple")
 
 
 def resample_10hz(
     aligned: DataFrame,
     partition_cols: list[str],
     ts_col: str = "date_time",
-    sample_cols: tuple[str, str, str] = ("acx", "acy", "acz"),
+    sample_cols: tuple[str, str, str] = AXES,
     gap_seconds: float = 1.0,
     burst: bool = False,
 ) -> DataFrame:
@@ -81,20 +77,25 @@ def resample_10hz(
     timestamps (``smooth_timestamp``, ``acc_reformat.py:218-228``).
 
     Each aligned row fans into 5 output rows with timestamps
-    ``session_start − 0.4 + 0.5·k + 0.1·pos`` (k = row index within
-    session, pos = 0..4). With ``burst=True`` the sample columns are
-    5-element arrays (the watch reports 5-sample bursts) and output row
-    ``pos`` takes element ``pos`` of each array — the reference achieves
-    this implicitly via pandas list-broadcast at ``acc_reformat.py:127``.
-    Here: sessionize (lag+cumsum), ``row_number`` for k, ``posexplode``
-    for the fan-out — all built-ins, no Python.
+    ``start − 0.4 + 0.5·k + 0.1·pos`` (k = row index within session,
+    pos = 0..4), where ``start`` is the session's first time floored to
+    the 0.5 s grid, so every session starts 400 ms before a grid point.
+    The rows themselves keep their own times, so k follows their time
+    order even where two rows floor to one grid point. With
+    ``burst=True`` the sample columns are 5-element arrays (the watch
+    reports 5-sample bursts) and output row ``pos`` takes element
+    ``pos`` of each array — the reference achieves this implicitly via
+    pandas list-broadcast at ``acc_reformat.py:127``. Here: sessionize
+    (lag+cumsum), ``row_number`` for k, ``posexplode`` for the fan-out —
+    all built-ins, no Python.
     """
     from pyspark.sql import Window
 
+    step_us = int(TOLERANCE_S * 1_000_000)
     sess = sessionize(aligned, partition_cols, ts_col, gap_seconds)
     w = Window.partitionBy(*partition_cols, "session_id").orderBy(ts_col)
     with_k = sess.withColumn("_k", F.row_number().over(w) - 1).withColumn(
-        "_session_start", F.first(ts_col).over(w)
+        "_start_us", F.unix_micros(F.first(ts_col).over(w))
     )
     exploded = with_k.select(
         *partition_cols,
@@ -102,9 +103,10 @@ def resample_10hz(
         *sample_cols,
         F.posexplode(F.sequence(F.lit(0), F.lit(4))).alias("_pos", "_sub"),
         (
-            F.unix_micros("_session_start")
+            F.col("_start_us")
+            - F.pmod("_start_us", F.lit(step_us))
             - 400_000
-            + F.col("_k") * 500_000
+            + F.col("_k") * step_us
         ).alias("_base_us"),
     )
     value_cols = [
@@ -142,20 +144,17 @@ def align_axes_greedy(
     ts_col: str = "date_time",
     kind_col: str = "kind",
     value_col: str = "data",
-    tolerance_s: float = 0.5,
-    match_range: int = 6,
-    replicate_xz_bug: bool = True,
 ) -> DataFrame:
-    """Plan B: exact greedy parity via ``applyInPandas`` (J1).
+    """Exact greedy parity via ``applyInPandas`` (J1).
 
     Re-implements the reference's sequential alignment semantics
     (``match_acc``/``find_match``/``xyz_match``,
     ``acc_reformat.py:136-215``) per group: walk the three sorted
     streams; when the heads don't pairwise match within tolerance,
     search a growing window of upcoming rows for the triple minimizing
-    total skipped samples and drop the skipped prefix. Written fresh
-    from the semantic spec (SURVEY.md §2.4 J1) — vectorized numpy inner
-    search instead of the reference's row-loop DataFrame cartesian.
+    total skipped samples and drop the skipped prefix. The walk ends
+    when the window covers every remaining row and holds no match.
+    Written fresh from the semantic spec (SURVEY.md §2.4 J1).
 
     Groups are (subject, day) shaped via ``partition_cols``: state never
     crosses a group, so parallelism = number of groups.
@@ -170,13 +169,13 @@ def align_axes_greedy(
         (out_fields + ", " if out_fields else "")
         + f"`{ts_col}` timestamp, acx {vtype}, acy {vtype}, acz {vtype}"
     )
+    tolerance_us = int(TOLERANCE_S * 1_000_000)
+    n = 6  # the reference's match range: loop guard and first search window
 
     def _match(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         keys = {c: pdf[c].iloc[0] for c in partition_cols}
         streams = {}
-        for axis in ("acx", "acy", "acz"):
+        for axis in AXES:
             sub = pdf[pdf[kind_col] == axis].sort_values(ts_col)
             # integer microseconds end-to-end: float-seconds round-trips
             # introduce sub-µs noise that Arrow refuses to truncate
@@ -187,35 +186,32 @@ def align_axes_greedy(
         tx, vx = streams["acx"]
         ty, vy = streams["acy"]
         tz, vz = streams["acz"]
-        tolerance_us = int(tolerance_s * 1_000_000)
 
         def match3(a: int, b: int, c: int) -> bool:
-            d1 = abs(a - b)
-            d2 = abs(b - c)
-            d3 = d2 if replicate_xz_bug else abs(a - c)
-            return max(d1, d2, d3) <= tolerance_us
+            # y–z twice, x–z never: the reference's xyz_match
+            return max(abs(a - b), abs(b - c), abs(b - c)) <= tolerance_us
 
         ix = iy = iz = 0
         rows = []
-        n = match_range
-        while (
-            ix < len(tx) - n and iy < len(ty) - n and iz < len(tz) - n
-        ):
+        while ix < len(tx) - n and iy < len(ty) - n and iz < len(tz) - n:
             if not match3(tx[ix], ty[iy], tz[iz]):
-                found = None
+                rest = max(len(tx) - ix, len(ty) - iy, len(tz) - iz)
+                cand = []
                 m = n
-                while found is None:
-                    cand = []
-                    for i in range(min(m, len(tx) - ix)):
-                        for j in range(min(m, len(ty) - iy)):
-                            for k in range(min(m, len(tz) - iz)):
-                                if match3(tx[ix + i], ty[iy + j], tz[iz + k]):
-                                    cand.append((i + j + k, i, j, k))
-                    if cand:
-                        found = min(cand)
-                    else:
-                        m += 2
-                _, di, dj, dk = found
+                while not cand:
+                    cand = [
+                        (i + j + k, i, j, k)
+                        for i in range(min(m, len(tx) - ix))
+                        for j in range(min(m, len(ty) - iy))
+                        for k in range(min(m, len(tz) - iz))
+                        if match3(tx[ix + i], ty[iy + j], tz[iz + k])
+                    ]
+                    if m >= rest:
+                        break
+                    m += 2
+                if not cand:
+                    break
+                _, di, dj, dk = min(cand)
                 ix, iy, iz = ix + di, iy + dj, iz + dk
             rows.append((tx[ix], vx[ix], vy[iy], vz[iz]))
             ix, iy, iz = ix + 1, iy + 1, iz + 1

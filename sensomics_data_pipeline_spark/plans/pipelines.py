@@ -93,36 +93,23 @@ def filter_measurements(
 def reformat_acc(
     ac: DataFrame,
     partition_cols: list[str] | None = None,
-    tolerance_s: float = 0.5,
     bin_seconds: int = 300,
-    greedy_parity: bool = False,
-    burst: bool | None = None,
 ) -> DataFrame:
     """Entry point 3 (``acc_reformat.py main``): align the 3 axis
     streams (J1), fan 5-sample bursts out to smooth 10 Hz timestamps
     (W4+R7), enrich with seconds/bin/g-force.
 
-    ``burst`` (auto-detected from the ``data`` type by default): the
-    watch reports 5-sample bursts per record (FIXTURES.md F4); scalar
-    streams skip the explode. ``greedy_parity=True`` switches to the
-    applyInPandas exact-greedy plan (Plan B).
+    The watch reports 5-sample bursts per record (FIXTURES.md F4): a
+    ``data`` column of arrays (or their JSON text) is resampled; scalar
+    streams skip the explode.
     """
     import pyspark.sql.types as T
 
     pc = partition_cols or []
-    data_type = ac.schema["data"].dataType
-    if isinstance(data_type, T.StringType):
+    if isinstance(ac.schema["data"].dataType, T.StringType):
         ac = ac.withColumn("data", F.from_json("data", T.ArrayType(T.DoubleType())))
-        data_type = ac.schema["data"].dataType
-    if burst is None:
-        burst = isinstance(data_type, T.ArrayType)
-    if greedy_parity:
-        aligned = acc_ops.align_axes_greedy(
-            ac, pc, ts_col="date_time", tolerance_s=tolerance_s
-        )
-    else:
-        aligned = acc_ops.align_axes(ac, pc, ts_col="date_time", tolerance_s=tolerance_s)
-    if burst:
+    aligned = acc_ops.align_axes(ac, pc, ts_col="date_time")
+    if isinstance(ac.schema["data"].dataType, T.ArrayType):
         aligned = acc_ops.resample_10hz(
             aligned, pc, ts_col="date_time", burst=True
         ).drop("session_id")

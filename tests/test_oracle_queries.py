@@ -35,22 +35,13 @@ def test_entry_smoke(spark):
 
 
 def _driver_checked_queries():
-    """Names that already have a driver CORRECTNESS row, derived from the
-    committed ``CORRECTNESS_r*.json`` files — NOT a hard-coded list, so the
-    guard survives future rotations untouched (the r5 verdict flagged the
-    hard-coded round-4 window breaking on a legitimate rotation)."""
-    import glob
-    import json
+    """Names with a row in any committed ``CORRECTNESS_r*.json``, from the
+    same scan that orders ``queries()``: not a hard-coded list, so the
+    guard survives a legitimate rotation untouched."""
     import os
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    seen: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            seen |= set(json.load(open(path)))
-        except (OSError, ValueError):  # pragma: no cover - corrupt artifact
-            continue
-    return seen
+    return set(entrymod._driver_last_rounds(root))
 
 
 def test_every_query_has_oracle_or_is_flagged():

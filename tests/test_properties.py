@@ -144,7 +144,7 @@ def test_melt_computed_wide_vendor_shape(spark):
 
 
 def test_reformat_acc_composition(spark):
-    """Entry point 3 end-to-end (plan A): burst rows → aligned wide →
+    """Entry point 3 end-to-end: axis rows → aligned wide →
     seconds/bin/g_force enrichment."""
     rows = []
     for i in range(20):

@@ -327,18 +327,56 @@ def _axis_rows(offsets, axis, n=30, values=None):
     return rows
 
 
-def test_align_axes_bucket_plan(spark):
-    rows = (
-        _axis_rows(0.0, "acx") + _axis_rows(0.05, "acy") + _axis_rows(0.1, "acz")
-    )
+def _triple_rows(offsets_ms, n=30, jitter_ms=0, axis_spread_ms=0, drop=(), seed=0):
+    """Triple ``i`` at ``TS0 + 0.5 s·i`` (plus up to ±``jitter_ms``), its
+    axes at ``offsets_ms`` from there (plus up to ±``axis_spread_ms``),
+    every axis valued ``i``; ``drop`` holds (i, axis) records left out."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        base = 500 * i + rng.randint(-jitter_ms, jitter_ms)
+        for axis, off in zip(("acx", "acy", "acz"), offsets_ms):
+            if (i, axis) in drop:
+                continue
+            ms = base + off + rng.randint(-axis_spread_ms, axis_spread_ms)
+            rows.append((TS0 + pd.Timedelta(milliseconds=ms), axis, float(i)))
+    return rows
+
+
+@pytest.mark.parametrize(
+    "rows, triples",
+    [
+        # axes 50 ms apart, well inside a 0.5 s grid cell
+        (_triple_rows((0, 50, 100)), set(range(30))),
+        # axes at t-2 ms, t and t+2 ms with t on the 0.5 s grid: every
+        # triple straddles a grid edge
+        (_triple_rows((-2, 0, 2)), set(range(30))),
+        # real-cadence jitter around the grid edges, one acy record lost:
+        # only that triple drops
+        (
+            _triple_rows((-2, 0, 2), jitter_ms=20, axis_spread_ms=3,
+                         drop={(17, "acy")}, seed=5),
+            set(range(30)) - {17},
+        ),
+    ],
+    ids=["inside_cell", "grid_edges", "jitter_one_drop"],
+)
+def test_align_axes_pairs_each_triple(spark, rows, triples):
+    """Each output row's three values come from one generated triple,
+    and every whole triple gives exactly one row, wherever it falls
+    against the 0.5 s grid."""
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["date_time", "kind", "data"])
     )
-    wide = acc_ops.align_axes(df, [], ts_col="date_time").orderBy("date_time")
-    got = wide.collect()
-    assert len(got) == 30
-    for r in got:
-        assert r["acx"] == r["acy"] == r["acz"]
+    got = acc_ops.align_axes(df, [], ts_col="date_time").toPandas()
+    assert (got["acx"] == got["acy"]).all() and (got["acx"] == got["acz"]).all()
+    assert sorted(got["acx"]) == sorted(triples)
+    # stamped with the triple's earliest record
+    first = pd.DataFrame(rows, columns=["date_time", "kind", "data"])
+    first = first.groupby("data")["date_time"].min()
+    assert (got["date_time"].to_numpy() == first[got["acx"]].to_numpy()).all()
 
 
 def test_align_axes_greedy_drops_unmatched(spark):
@@ -552,9 +590,10 @@ def _greedy_ref(tx, vx, ty, vy, tz, vz, tol_us, n):
     rows = []
     while ix < len(tx) - n and iy < len(ty) - n and iz < len(tz) - n:
         if not match3(tx[ix], ty[iy], tz[iz]):
-            found = None
+            rest = max(len(tx) - ix, len(ty) - iy, len(tz) - iz)
+            cand = []
             m = n
-            while found is None:
+            while not cand:
                 cand = [
                     (i + j + k, i, j, k)
                     for i in range(min(m, len(tx) - ix))
@@ -562,21 +601,69 @@ def _greedy_ref(tx, vx, ty, vy, tz, vz, tol_us, n):
                     for k in range(min(m, len(tz) - iz))
                     if match3(tx[ix + i], ty[iy + j], tz[iz + k])
                 ]
-                if cand:
-                    found = min(cand)
-                else:
-                    m += 2
-            _, di, dj, dk = found
+                if m >= rest:
+                    break
+                m += 2
+            if not cand:
+                break
+            _, di, dj, dk = min(cand)
             ix, iy, iz = ix + di, iy + dj, iz + dk
         rows.append((tx[ix], vx[ix], vy[iy], vz[iz]))
         ix, iy, iz = ix + 1, iy + 1, iz + 1
     return rows
 
 
+def test_greedy_walk_ends_when_no_triple_matches(spark):
+    """acz jumps a minute ahead after its tenth record: from there on no
+    triple matches, so both greedy walks (the operator and
+    ``_greedy_ref``) must end once their search window covers every
+    remaining row, with the ten matched triples, instead of widening the
+    window forever. Each walk gets a deadline."""
+    import signal
+    import threading
+
+    base_us = int(TS0.value // 1000)
+    t = [base_us + 500_000 * i for i in range(40)]
+    tz = t[:10] + [base_us + 60_000_000 + 500_000 * i for i in range(30)]
+    v = [float(i) for i in range(40)]
+    rows = [
+        (pd.Timestamp(us, unit="us"), axis, val)
+        for axis, ts_ in (("acx", t), ("acy", t), ("acz", tz))
+        for us, val in zip(ts_, v)
+    ]
+
+    def _timeout(*_):
+        raise TimeoutError("greedy reference walk did not end")
+
+    old = signal.signal(signal.SIGALRM, _timeout)
+    signal.alarm(10)
+    try:
+        want = _greedy_ref(t, v, t, v, tz, v, 500_000, 6)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["date_time", "kind", "data"])
+    )
+    sc = spark.sparkContext
+    timer = threading.Timer(120, sc.cancelAllJobs)
+    timer.start()
+    try:
+        got = acc_ops.align_axes_greedy(df, [], ts_col="date_time").toPandas()
+    finally:
+        timer.cancel()
+    assert [(r[1], r[2], r[3]) for r in want] == [(v[i],) * 3 for i in range(10)]
+    assert list(zip(got["acx"], got["acy"], got["acz"])) == [
+        (r[1], r[2], r[3]) for r in want
+    ]
+
+
 def test_align_greedy_large_randomized_parity(spark):
     """Large randomized stream (2 groups x ~3000 triples, jitter, 2%
-    random drops per axis): the distributed Plan B must reproduce the
-    reference walk exactly, per group, with no state crossing groups."""
+    random drops per axis): the distributed ``align_axes_greedy`` must
+    reproduce the reference walk exactly, per group, with no state
+    crossing groups."""
     import random
 
     rng = random.Random(17)
@@ -627,32 +714,29 @@ def test_align_greedy_large_randomized_parity(spark):
 
 
 def test_align_plans_agree_on_clean_data(spark):
-    """On drop-free, well-separated streams, the scalable bucket plan
-    (A) and the greedy parity plan (B) must produce identical aligned
-    triples."""
-    rows = []
-    for i in range(40):
-        t = TS0 + pd.Timedelta(seconds=0.5 * i)
-        for axis in ("acx", "acy", "acz"):
-            rows.append((t + pd.Timedelta(milliseconds=5), axis, float(i)))
+    """On drop-free, well-separated streams whose triples straddle the
+    0.5 s grid edges (axes at t-2 ms, t and t+2 ms), ``align_axes`` must
+    produce the triples of the greedy reference walk, with the same
+    times."""
     df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["date_time", "kind", "data"])
+        pd.DataFrame(_triple_rows((-2, 0, 2), n=40),
+                     columns=["date_time", "kind", "data"])
     )
     a = (
         acc_ops.align_axes(df, [], ts_col="date_time")
-        .select("acx", "acy", "acz")
+        .select("date_time", "acx", "acy", "acz")
         .toPandas()
-        .sort_values("acx")
+        .sort_values("date_time")
         .reset_index(drop=True)
     )
     b = (
         acc_ops.align_axes_greedy(df, [], ts_col="date_time")
-        .select("acx", "acy", "acz")
+        .select("date_time", "acx", "acy", "acz")
         .toPandas()
-        .sort_values("acx")
+        .sort_values("date_time")
         .reset_index(drop=True)
     )
-    # plan B's loop guard discards the trailing match_range rows
+    # the greedy loop guard discards the trailing match-range rows
     # (acc_reformat.py:204-210 semantics) — compare the common prefix
     assert len(b) >= len(a) - 7
     common = min(len(a), len(b))
